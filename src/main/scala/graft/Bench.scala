@@ -169,30 +169,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false")
-      // AQE coalesce floor (round 15, guide §2.2/§2.5): AQE's default
-      // 1 MB minPartitionSize coalesces every sub-32 MB shuffle below
-      // `cpus` partitions — at bench scale that put CPU-DENSE, small-BYTE
-      // stages (levenshtein verify, array_intersect re-checks, pair
-      // joins) on ONE core (measured: q42 10.7→5.4 s, q113 9.9→5.5 s,
-      // q181 6.5→3.2 s cold with the 64k floor; sub-second tail
-      // unchanged). 64k keeps the declared shuffle.partitions=cpus
-      // parallelism for any shuffle ≥ cpus·64k. At production scale the
-      // floor is inert: coalescing targets max(bytes/parallelism, floor),
-      // and real shuffles are GBs, so partitions sit far above either
-      // floor — this knob only stops parallelism collapse on small
-      // inputs. Env-parameterized for cluster tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEnv.session()
     val wall0 = System.nanoTime()
     def wallS: Long = (System.nanoTime() - wall0) / 1000000000L
     // Untimed warmup: JIT + codegen + parquet footer caches, so the first
@@ -292,11 +269,17 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(o => o.exists(name.startsWith)) }
 
+    // Failure accounting: a query that throws is not a measurement. Its
+    // name lands in the artifact's `failed` list and it is left out of
+    // the totals, the requeue pass and every ratio vote, so a failure
+    // can never read as a fast query.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -315,13 +298,14 @@ object Bench {
       // IDENTICAL code disagree >2x, a shared-host noise episode spanned
       // one of them — keep sampling (≤4 runs) until two agree, take the
       // min. Bounded, and quiet runs still cost exactly two executions.
-      if (first <= RerunThresholdSec) (first, false)
+      // A failed run ends the sampling (the caller drops the query).
+      if (first <= RerunThresholdSec || failed(name)) (first, false)
       else {
         var prev = first
         var cur = once(name, fn)
         var best = math.min(prev, cur)
         var tries = 2
-        while (tries < 4 &&
+        while (tries < 4 && !failed(name) &&
             math.max(prev, cur) > 2.0 * math.min(prev, cur)) {
           prev = cur
           cur = once(name, fn)
@@ -345,10 +329,13 @@ object Bench {
     selected.zipWithIndex.foreach { case ((name, fn), i) =>
       if (i % ProbeEveryN == 0) blockProbes += loggedProbePair()
       val (dt, suspect) = measure(name, fn)
-      System.err.println(f"[bench] t+${wallS}%ds $name $dt%.2fs" +
-        (if (suspect) " SUSPECT(spread>2x)" else "") +
-        (if (exceedsPrior(name, dt)) " PRIOR>3x" else ""))
-      pass1 += ((name, fn, dt, suspect, i / ProbeEveryN))
+      if (failed(name)) System.err.println(f"[bench] t+${wallS}%ds $name FAILED")
+      else {
+        System.err.println(f"[bench] t+${wallS}%ds $name $dt%.2fs" +
+          (if (suspect) " SUSPECT(spread>2x)" else "") +
+          (if (exceedsPrior(name, dt)) " PRIOR>3x" else ""))
+        pass1 += ((name, fn, dt, suspect, i / ProbeEveryN))
+      }
     }
     blockProbes += loggedProbePair() // closes the last block's window
 
@@ -434,10 +421,10 @@ object Bench {
     val requeued = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Boolean)]
     val requeueReasons = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     val priorExceeded = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = pass1.map { case (name, fn, t1, suspect1, block) =>
+    val results = pass1.flatMap { case (name, fn, t1, suspect1, block) =>
       val windowHot = pairHot(blockProbes(block)) || pairHot(blockProbes(block + 1))
       val tier = priorTier(name, t1)
-      if (!windowHot && !suspect1 && tier.isEmpty) name -> (t1, false)
+      if (!windowHot && !suspect1 && tier.isEmpty) Some(name -> (t1, false))
       else {
         requeueReasons += name -> (
           (if (windowHot) Seq("window_hot") else Nil) ++
@@ -445,23 +432,28 @@ object Bench {
         val rb = loggedProbePair()
         val (t2, suspect2) = measure(name, fn)
         val ra = loggedProbePair()
-        val pass2Contended = pairHot(rb) || pairHot(ra) || suspect2
-        // if pass 1 (taken in a known-dirty window) still beat pass 2, the
-        // accepted number carries pass 1's contamination risk
-        val acceptedContended = if (t2 <= t1) pass2Contended else true
-        val accepted = math.min(t1, t2)
-        // the ratchet holds across passes: identical code cannot honestly
-        // slow 3x vs its (ambient-scaled) committed prior, so a surviving
-        // excess is contention by definition even when every probe stayed
-        // quiet
-        val stillPrior = exceedsPriorAmbient(name, accepted)
-        if (stillPrior) priorExceeded += name
-        val flagged = acceptedContended || stillPrior
-        System.err.println(f"[bench] $name REQUEUED $t1%.2fs -> $t2%.2fs" +
-          (if (flagged) " (still contended)" else "") +
-          (if (stillPrior) " PRIOR>3x" else ""))
-        requeued += name -> (t1, t2, flagged)
-        name -> (accepted, flagged)
+        if (failed(name)) {
+          System.err.println(f"[bench] $name REQUEUED $t1%.2fs -> FAILED")
+          None
+        } else {
+          val pass2Contended = pairHot(rb) || pairHot(ra) || suspect2
+          // if pass 1 (taken in a known-dirty window) still beat pass 2, the
+          // accepted number carries pass 1's contamination risk
+          val acceptedContended = if (t2 <= t1) pass2Contended else true
+          val accepted = math.min(t1, t2)
+          // the ratchet holds across passes: identical code cannot honestly
+          // slow 3x vs its (ambient-scaled) committed prior, so a surviving
+          // excess is contention by definition even when every probe stayed
+          // quiet
+          val stillPrior = exceedsPriorAmbient(name, accepted)
+          if (stillPrior) priorExceeded += name
+          val flagged = acceptedContended || stillPrior
+          System.err.println(f"[bench] $name REQUEUED $t1%.2fs -> $t2%.2fs" +
+            (if (flagged) " (still contended)" else "") +
+            (if (stillPrior) " PRIOR>3x" else ""))
+          requeued += name -> (t1, t2, flagged)
+          Some(name -> (accepted, flagged))
+        }
       }
     }.toSeq
 
@@ -494,6 +486,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val contendedJson = contendedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val priorExceededJson = priorExceeded.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Sentinel self-audit (round-13): everything the offline replay tool
     // recomputes, embedded so a reader adjudicates from the artifact
     // alone — tools/replay_sentinel.py --verify re-derives this block
@@ -524,7 +517,7 @@ object Bench {
     val auditJson =
       s"""{"probe_ratio_cpu":${f"$probeRatioCpu%.4f"},"probe_ratio_io":${f"$probeRatioIo%.4f"},"probe_ratio":${f"$probeRatio%.4f"},"pass1_median_ratio":${f"$pass1MedianRatio%.4f"},"median_prior_ratio_normalized":${f"$medianPriorRatioNorm%.4f"},"tier_counts":$tierCounts,"requeue_reasons":$reasonsJson,"ratio_histogram":$histJson}"""
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","isolation":"clearCache-between-queries","noise_probe_ms":$probesJson,"io_probe_ms":$ioProbesJson,"probe_median_ms":${math.round(probeMedianMs)},"io_probe_median_ms":${math.round(ioMedianMs)},"hot_probe_ms":${math.round(hotMs)},"io_hot_probe_ms":${math.round(ioHotMs)},"prior_file":"$priorPath","prior_queries":${prior.size},"median_prior_ratio":${f"$medianPriorRatio%.3f"},"pass1_median_ratio":${f"$pass1MedianRatio%.3f"},"probe_ratio":${f"$probeRatio%.4f"},"median_prior_ratio_normalized":${f"$medianPriorRatioNorm%.3f"},"globally_contended":$globallyContended,"prior_exceeded":$priorExceededJson,"requeued":$requeueJson,"contended":$contendedJson,"sentinel_audit":$auditJson,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","isolation":"clearCache-between-queries","noise_probe_ms":$probesJson,"io_probe_ms":$ioProbesJson,"probe_median_ms":${math.round(probeMedianMs)},"io_probe_median_ms":${math.round(ioMedianMs)},"hot_probe_ms":${math.round(hotMs)},"io_hot_probe_ms":${math.round(ioHotMs)},"prior_file":"$priorPath","prior_queries":${prior.size},"median_prior_ratio":${f"$medianPriorRatio%.3f"},"pass1_median_ratio":${f"$pass1MedianRatio%.3f"},"probe_ratio":${f"$probeRatio%.4f"},"median_prior_ratio_normalized":${f"$medianPriorRatioNorm%.3f"},"globally_contended":$globallyContended,"prior_exceeded":$priorExceededJson,"requeued":$requeueJson,"contended":$contendedJson,"failed":$failedJson,"sentinel_audit":$auditJson,"queries":$fullQs,"sf":"$sfDir"}"""
     // a filtered dev run must not clobber the full-suite artifact — it
     // writes bench_subset.json instead (stress_bench.sh bootstraps its
     // quiet probe baseline from one)
@@ -539,7 +532,7 @@ object Bench {
       "\"" + k.takeWhile(_ != '_') + "\":" + math.round(v * 1000)
     }.mkString("{", ",", "}")
     val hotProbes = probeLog.count(_ > hotMs) + ioProbeLog.count(_ > ioHotMs)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","unit_queries":"ms","isolation":"clearCache-between-queries","probes":${probeLog.length + ioProbeLog.length},"hot_probes":$hotProbes,"requeued":${requeued.size},"contended":${contendedNames.length},"prior_exceeded":${priorExceeded.length},"probe_ratio":${f"$probeRatio%.3f"},"globally_contended":$globallyContended,"queries":$qs,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","unit_queries":"ms","isolation":"clearCache-between-queries","probes":${probeLog.length + ioProbeLog.length},"hot_probes":$hotProbes,"requeued":${requeued.size},"contended":${contendedNames.length},"prior_exceeded":${priorExceeded.length},"failed":$failedJson,"probe_ratio":${f"$probeRatio%.3f"},"globally_contended":$globallyContended,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Prints the formatted physical plan of selected inventory queries —
   * the plan-review loop (pushdown/pruning/broadcast/shuffle counts).
   * Usage: Explain <sfDir> [queryName...]
@@ -8,14 +7,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores, the test harness's width, so plans match PlanSpec's
+    val spark = SparkEnv.session(cpus = 4)
     Queries.all
       .filter(q => names.isEmpty || names.contains(q.name))
       .foreach { q =>

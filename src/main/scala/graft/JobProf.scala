@@ -1,31 +1,25 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev-aid profiler (round 15): runs selected inventory queries under a
-  * SparkListener and reports, per query, wall seconds vs the cluster-side
-  * task time, plus job/stage/task counts — the number that separates
-  * "compute-bound" (optimize the algorithm / expressions) from
+/** The profiler: runs selected inventory queries under the bench's
+  * session and a SparkListener and reports, per run, wall seconds vs the
+  * cluster-side task time, plus job/stage/task counts — the number that
+  * separates "compute-bound" (optimize the algorithm / expressions) from
   * "orchestration-bound" (optimize job/stage/pass counts). Usage:
-  *   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.JobProf q158_fuzzy_pairs ...
+  *   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.JobProf [--repeat N] q158_fuzzy_pairs ...
+  * Query arguments are name prefixes (none = every query); `--repeat N`
+  * (default 1) runs each selected query N times, one row per run, for
+  * steady-state timings. `SPARK_GRAFT_PROF_JOBS=1` adds per-job walls.
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false")
-      // A/B knob: SPARK_GRAFT_MIN_COALESCE sets the AQE coalesce floor
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (repeat, names) = args.toList match {
+      case "--repeat" :: n :: rest => (n.toInt, rest)
+      case rest => (1, rest)
+    }
+    val spark = SparkEnv.session()
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     val gcMs = new AtomicLong; val serMs = new AtomicLong
@@ -57,11 +51,10 @@ object JobProf {
     // warmup (mirrors Bench)
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val names = if (args.nonEmpty) args.toSet else Set.empty[String]
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.exists(n.startsWith) }
-    println(f"${"query"}%-28s ${"wall_s"}%7s ${"task_s"}%7s ${"gc_s"}%5s ${"ser_s"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s")
-    sel.foreach { case (name, fn) =>
+    println(f"${"query"}%-28s ${"run"}%3s ${"wall_s"}%7s ${"task_s"}%7s ${"gc_s"}%5s ${"ser_s"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s")
+    for ((name, fn) <- sel; run <- 1 to repeat) {
       spark.catalog.clearCache()
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0); serMs.set(0)
       val t0 = System.nanoTime()
@@ -70,7 +63,7 @@ object JobProf {
       val wall = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; give them a beat
       Thread.sleep(300)
-      println(f"$name%-28s $wall%7.2f ${taskMs.get / 1e3}%7.2f ${gcMs.get / 1e3}%5.1f ${serMs.get / 1e3}%5.1f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d")
+      println(f"$name%-28s $run%3d $wall%7.2f ${taskMs.get / 1e3}%7.2f ${gcMs.get / 1e3}%5.1f ${serMs.get / 1e3}%5.1f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d")
     }
     spark.stop()
   }

@@ -3,7 +3,8 @@ import org.apache.spark.sql.SparkSession
 /** Driver-conditions smoke check: runs [[SparkEntry.entry]] with a BARE
   * SparkSession (no graft-specific config), exactly as the driver does.
   * Catches accidental dependencies on session config (e.g. parquet reader
-  * flags) that Verify/Bench set for themselves.
+  * flags) that [[SparkEnv.session]] sets for every other main — which is
+  * why this is the one main that must not use it.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {

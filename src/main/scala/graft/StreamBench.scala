@@ -2,7 +2,7 @@ package graft
 
 import graft.client.GraftClient
 import graft.table._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -33,12 +33,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val densities = args.headOption.getOrElse("1,8")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEnv.session()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     spark.range(1000000).selectExpr("sum(id)").collect() // warmup

@@ -225,8 +225,8 @@ class PlanSpec extends SparkSuite {
 
   test("minhash LSH (q22/q71): no rescans past the checkpoint, bounded shuffles") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    // Locks the honest q22 plan the round-5/6 A/B adjudicated
-    // (BenchMinhash): everything downstream of the band-bucket
+    // Locks the honest q22 plan the round-5/6 A/B adjudicated (recorded
+    // at Dedup.minhashSignatures): everything downstream of the band-bucket
     // localCheckpoint is bucket-local — hot-bucket count, broadcast
     // anti-join cap, self-join sides, final distinct. A parquet scan here
     // means the shingle+signature pipeline came back; shuffle growth means
@@ -448,20 +448,38 @@ class PlanSpec extends SparkSuite {
     // window ran nearly single-task. The fix pins the exchange BELOW the
     // spine agg (child partitioned on (keys, bucket) — never redundant).
     // This lock fails if a refactor lets the planner prune it again.
+    import org.apache.spark.sql.catalyst.expressions.{Explode, Sequence}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
     import org.apache.spark.sql.functions._
     val e = spark.read.parquet(s"$sfDir/events.parquet")
     val df = graft.ops.TimeSeries.resample(
       e.select(col("user_id"),
         (unix_millis(col("ts").cast("timestamp"))).as("ts_ms"), col("value")),
       Seq("user_id"), "ts_ms", "value", 3600000L)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("REPARTITION_BY_NUM"),
+    val plan = df.queryExecution.executedPlan
+    // every node of the physical plan, through AQE and query-stage wrappers
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => s +: nodes(s.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def pinned(p: SparkPlan): Seq[ShuffleExchangeExec] = nodes(p).collect {
+      case x: ShuffleExchangeExec if x.shuffleOrigin == REPARTITION_BY_NUM => x
+    }
+    assert(pinned(plan).nonEmpty,
       s"resample spine repartition was pruned from the plan:\n$plan")
-    // and the generate (grid explode) must sit ABOVE that exchange, so
-    // the fan-out happens at the pinned parallelism
-    val genIdx = plan.indexOf("Generate")
-    val repIdx = plan.indexOf("REPARTITION_BY_NUM")
-    assert(genIdx >= 0 && repIdx > genIdx,
+    // and the grid explode (explode(sequence(lo, hi, every))) must sit
+    // ABOVE that exchange, so the fan-out happens at the pinned parallelism
+    val grid = nodes(plan).collect {
+      case g: GenerateExec if (g.generator match {
+        case Explode(_: Sequence) => true
+        case _ => false
+      }) => g
+    }
+    assert(grid.size == 1, s"expected one grid explode, got ${grid.size}:\n$plan")
+    assert(pinned(grid.head.child).nonEmpty,
       s"grid explode does not sit above the pinned exchange:\n$plan")
   }
 

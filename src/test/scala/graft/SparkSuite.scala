@@ -31,17 +31,7 @@ trait SparkSuite extends AnyFunSuite {
 object SparkSuite {
   lazy val tmpDir: String =
     SparkEnv.scratchDir("graft-test")
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", SparkEnv.localDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Cores of the test session. */
+  val Cpus = 4
+  lazy val session: SparkSession = SparkEnv.session(Cpus)
 }
