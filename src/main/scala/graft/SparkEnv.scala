@@ -49,7 +49,7 @@ object SparkEnv {
 
   /** The one session builder, at `cpus` cores (default
     * `SPARK_GRAFT_CPUS`, else 32). Every main except [[Smoke]] (which checks
-    * [[SparkEntry.entry]] under the driver's bare session on purpose) and
+    * [[SparkEntry.entry]] under a bare session on purpose) and
     * the test harness get their session here, so the oracle, the tests,
     * the profiler and the bench all run under the config the bench times:
     * `local[cpus]` with `cpus` shuffle partitions, UTC, nanosecond parquet
