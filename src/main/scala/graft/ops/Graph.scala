@@ -217,13 +217,19 @@ object Graph {
     *
     * Returns (node, label). Isolated self-loops keep their own label.
     *
-    * 100 TB shape: per iteration, one neighbor-message join on the
-    * checkpointed symmetric edge list and TWO map-side-combined
-    * aggregations — (node, label) counts, then the per-node argmax as
-    * `max(struct(cnt, -label))` (an aggregate, NOT a per-node sort
-    * window). Labels are checkpointed each round, so lineage stays flat.
-    * Degree skew lands on the (node, label) count key, which AQE
-    * re-splits; there is no pair space anywhere.
+    * Round 1 is closed-form: each node starts as its own label and the
+    * symmetric edge list is distinct, so every neighbor label counts once
+    * and the rule picks `min(b)`. Each later round is one neighbor join
+    * plus one `mode(label, true)` aggregate (ties to the smallest label),
+    * so count and argmax are fused and no label is negated.
+    *
+    * 100 TB shape: per round, one join on the checkpointed symmetric edge
+    * list and ONE map-side-combined aggregate keyed by node. Each round's
+    * labels are read once, so only the edges are checkpointed: the plan
+    * grows linearly and nothing runs before the caller's action. Skew: a
+    * node's neighbor-label histogram is one `mode` buffer (per task, then
+    * per node) that AQE cannot split, so a hub holds all its distinct
+    * neighbor labels in one buffer. There is no pair space anywhere.
     */
   def labelPropagation(
       edges0: DataFrame,
@@ -237,19 +243,12 @@ object Graph {
     val edges = dir.union(dir.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val counts = edges
+    var labels = edges.groupBy(col("a").as("node")).agg(min("b").as("label"))
+    for (_ <- 2 to iters) {
+      labels = edges
         .join(labels.withColumnRenamed("node", "b"), Seq("b"))
-        .groupBy(col("a").as("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      labels = counts
-        .groupBy(col("node"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("best"))
-        .select(col("node"), (-col("best.nl")).as("label"))
-        .localCheckpoint()
+        .groupBy(col("a").as("node"))
+        .agg(mode(col("label"), true).as("label"))
     }
     labels
   }

@@ -187,30 +187,52 @@ class GraphSpec extends SparkSuite {
     assert(Set(10L, 11L, 12L).map(got) == Set(3L))
   }
 
-  test("labelPropagation matches a scalar synchronous replay on random graphs") {
+  /** Scalar synchronous replay of the label-propagation rule over the
+    * undirected graph: count desc, ties to the SMALLEST label.
+    */
+  private def replayLabels(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val adj = (edges ++ edges.map(_.swap)).distinct
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    var labels = adj.keys.map(k => k -> k).toMap
+    for (_ <- 1 to iters) {
+      labels = adj.map { case (node, nbrs) =>
+        val counts = nbrs.groupBy(labels).toSeq.map { case (l, xs) => (xs.size, l) }
+        node -> counts.minBy { case (c, l) => (-c, l) }._2
+      }
+    }
+    labels
+  }
+
+  private def labelsOf(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val spark2 = spark
     import spark2.implicits._
-    for (seed <- 1 to 4) {
+    Graph.labelPropagation(edges.toDF("s", "d"), "s", "d", iters)
+      .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
+  }
+
+  test("labelPropagation matches a scalar synchronous replay on random graphs") {
+    val random = (1 to 4).map { seed =>
       val rnd = new scala.util.Random(seed)
-      val n = 30
-      val edges = (1 to 60).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      (1 to 60).map(_ => (rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
         .filter { case (a, b) => a != b }.distinct
-      // scalar replay of the exact rule: undirected, count desc / label asc
-      val adj = (edges ++ edges.map(_.swap)).distinct
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-      var labels = adj.keys.map(k => k -> k).toMap
-      for (_ <- 1 to 3) {
-        labels = adj.map { case (node, nbrs) =>
-          val counts = nbrs.groupBy(labels).toSeq.map { case (l, xs) => (xs.size, l) }
-          // max count; tie → SMALLEST label
-          val best = counts.sortBy { case (c, l) => (-c, l) }.head._2
-          node -> best
-        }
-      }
-      val got = Graph.labelPropagation(edges.toDF("s", "d"), "s", "d", iters = 3)
-        .collect().map(r => r.getAs[Long]("node") -> r.getAs[Long]("label")).toMap
-      assert(got == labels, s"seed=$seed")
     }
+    // plus a hub 1000 linked to leaves 100..139, each leaf also linked to a
+    // private node below it, in shuffled order: after round 1 every leaf
+    // carries its private node as a distinct label, so round 2 is a 40-way
+    // tie at the hub, which must take the smallest of them
+    val priv = new scala.util.Random(7).shuffle((0L until 40L).toList)
+    val hub = (0 until 40).flatMap(i => Seq((1000L, 100L + i), (100L + i, priv(i))))
+    assert(replayLabels(hub, 2)(1000L) == 0L)
+    for ((edges, g) <- (random :+ hub).zipWithIndex; iters <- Seq(1, 2, 3, 5))
+      assert(labelsOf(edges, iters) == replayLabels(edges, iters), s"graph=$g iters=$iters")
+  }
+
+  test("labelPropagation carries Long.MinValue as a label") {
+    // the label must never be negated: -Long.MinValue overflows under ANSI
+    val edges = Seq((0L, Long.MinValue), (0L, 5L))
+    assert(labelsOf(edges, 1)(0L) == Long.MinValue)
+    for (iters <- Seq(1, 2))
+      assert(labelsOf(edges, iters) == replayLabels(edges, iters), s"iters=$iters")
   }
 
   test("kCore peels chains off a clique; short runs flag non-convergence") {

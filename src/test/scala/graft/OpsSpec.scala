@@ -1748,6 +1748,36 @@ class OpsSpec extends SparkSuite {
     assert(got.head("scaled") == 7.0)
   }
 
+  test("online store matches Int, Long and Double requests for a Long key") {
+    import graft.client.{GraftClient, MemoryOnlineStore}
+    import graft.table._
+    val cl = new GraftClient(spark)
+    val spark2 = spark
+    import spark2.implicits._
+    cl.materialize(
+      DataFrameSource("nk_dim", Seq((7L, 3.5), (8L, 4.5)).toDF("uid", "rate"),
+        keys = Some(Seq("uid"))),
+      MemoryStoreSink("nk_dim"))
+    def view(table: String) = OnDemandFeatureView(
+      s"nk_view_$table",
+      features = Seq(Feature("rate", JoinTransform(table, "rate"), keys = Some(Seq("uid")))),
+      requestFields = Seq("uid"))
+    def served(table: String, req: Map[String, Any]) =
+      cl.getOnlineFeatures(Seq(req), view(table)).head("rate")
+    for (uid <- Seq[Any](7, 7L, 7.0)) {
+      assert(MemoryOnlineStore.get("nk_dim", Map("uid" -> uid)).map(_("rate")) == Some(3.5),
+        s"${uid.getClass}")
+      assert(served("nk_dim", Map("uid" -> uid)) == 3.5, s"${uid.getClass}")
+    }
+    // misses: no key field, a null key (none stored), an unregistered table
+    val misses = Seq[(String, Map[String, Any])](
+      "nk_dim" -> Map("other" -> 7L), "nk_dim" -> Map("uid" -> null), "nk_none" -> Map("uid" -> 7L))
+    for ((table, req) <- misses) {
+      assert(MemoryOnlineStore.get(table, req).isEmpty, s"$table $req")
+      assert(served(table, req) == null, s"$table $req")
+    }
+  }
+
   test("feature-attached metrics match the reference transformation golden") {
     // ref: metric_stores/tests/test_metric_store.py test_metric_transformation
     // — int64_v [1, -1] with Count/Ratio/Average("> 0", 1d) and string_v

@@ -193,6 +193,34 @@ class PlanSpec extends SparkSuite {
     assert(out.count() == 4)
   }
 
+  test("labelPropagation: one join and one aggregate per round over the one edge checkpoint") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val spark2 = spark
+    import spark2.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L), (11L, 12L),
+      (10L, 12L), (3L, 10L)).toDF("s", "d")
+    def run(iters: Int) = graft.ops.Graph.labelPropagation(edges, "s", "d", iters).queryExecution
+    val three = run(3)
+    val p3 = three.optimizedPlan
+    // the edge list is the only checkpoint: a per-round checkpoint would
+    // cut the plan down to a single LogicalRDD and drop its rounds
+    val rdds = p3.collect { case r: LogicalRDD => r.rdd.id }
+    assert(rdds.size == 3 && rdds.distinct.size == 1,
+      s"expected every round to read the one edge checkpoint:\n$p3")
+    // round 1 is the closed-form min, each later round one join + one mode
+    assert(p3.collect { case a: Aggregate => a }.size == 3, s"one aggregate per round:\n$p3")
+    assert(p3.collect { case j: Join => j }.size == 2, s"one join per round after the first:\n$p3")
+    // small data broadcasts the label table: one shuffle per round
+    assert(shuffles(three.executedPlan) <= 3,
+      s"labelPropagation shuffle count grew:\n${three.executedPlan}")
+    // without per-round checkpoints the plan grows by a fixed step per round
+    def nodes(iters: Int) = run(iters).optimizedPlan.collect { case p => p }.size
+    val step = nodes(4) - nodes(3)
+    assert(step <= 4, s"a round adds $step logical nodes")
+    assert(nodes(20) == nodes(3) + 17 * step, s"plan grows non-linearly: ${nodes(20)} nodes")
+  }
+
   test("cooccurrence: capped pair self-join stays equi-join with bounded shuffles") {
     val spark2 = spark
     import spark2.implicits._

@@ -1,0 +1,112 @@
+#!/usr/bin/env python3
+"""Alternating parent/change pairs of the repo benchmark.
+
+    tools/ab.py PARENT WORKLOAD --pairs N --seconds S [--change REV] [--seed0 K]
+
+PARENT and --change (default HEAD) are git revs, each checked out as a
+detached `git worktree` in a scratch directory outside the repo, or paths
+to directories that already hold a checkout. Pair i runs
+`perfbench/run.py --workload WORKLOAD --seed K+i --seconds S` in both trees
+with the same seed, the parent first on even pairs and the change first on
+odd ones. It prints each pair's end-to-end metrics (the `end_to_end` list of
+BENCHMARK.json), then each side's median and quartiles and how many pairs
+the change won. Builds, logs and worktrees go to the scratch directory
+(`--work`, default a fresh temporary directory); nothing is written inside
+the checkout, and worktrees it made are removed at the end.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = subprocess.run(["git", "rev-parse", "--show-toplevel"], capture_output=True,
+                      text=True, check=True, cwd=os.path.dirname(os.path.abspath(__file__))).stdout.strip()
+
+
+def checkout(ref, work, side, made):
+    """A directory holding `ref`: the path itself if it is one, else a new worktree."""
+    if os.path.isdir(ref):
+        return os.path.abspath(ref)
+    path = os.path.join(work, side)
+    subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", path, ref],
+                   check=True, stdout=subprocess.DEVNULL)
+    made.append(path)
+    return path
+
+
+def run(tree, workload, seed, seconds, log):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    with open(log, "w") as err:
+        p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=err, text=True)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        raise SystemExit(f"{tree}: run.py exited {p.returncode}; see {log}")
+    r = json.loads(lines[-1])
+    return {k: v["value"] for k, v in r["metrics"].items()}, r["failed"]
+
+
+def quartiles(xs):
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
+    return q1, q2, q3
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("parent", help="git rev or checkout directory of the parent")
+    ap.add_argument("workload")
+    ap.add_argument("--change", default="HEAD", help="git rev or checkout directory (default HEAD)")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seed0", type=int, default=1000, help="seed of the first pair")
+    ap.add_argument("--work", help="scratch directory outside the checkout")
+    a = ap.parse_args()
+
+    work = os.path.abspath(a.work or tempfile.mkdtemp(prefix="ab-"))
+    if os.path.commonpath([work, ROOT]) == ROOT:
+        raise SystemExit(f"--work {work} is inside the checkout")
+    os.makedirs(work, exist_ok=True)
+    made = []
+    try:
+        trees = {"parent": checkout(a.parent, work, "parent", made),
+                 "change": checkout(a.change, work, "change", made)}
+        with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
+            better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        names = list(better)
+        res = {"parent": [], "change": []}
+        print("pair seed first  " + "  ".join(f"{n:>19}" for n in names) + "  failed(p/c)")
+        for i in range(a.pairs):
+            seed = a.seed0 + i
+            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+            failed = {}
+            for side in order:
+                m, failed[side] = run(trees[side], a.workload, seed, a.seconds,
+                                      os.path.join(work, f"{side}-{seed}.log"))
+                res[side].append(m)
+            cells = [f"{res['parent'][-1][n]:>9.4g}/{res['change'][-1][n]:<9.4g}" for n in names]
+            print(f"{i:>4} {seed:>4} {order[0]:<6} " + "  ".join(cells)
+                  + f"  {failed['parent']}/{failed['change']}", flush=True)
+
+        print(f"\n{a.workload}: {a.pairs} pairs, parent vs change (q1 / median / q3)")
+        for n in names:
+            p = [r[n] for r in res["parent"]]
+            c = [r[n] for r in res["change"]]
+            sign = -1 if better[n] == "lower" else 1
+            wins = sum(sign * (y - x) > 0 for x, y in zip(p, c))
+            pq, cq = quartiles(p), quartiles(c)
+            delta = (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
+            print(f"  {n:<8} parent {pq[0]:.4g} / {pq[1]:.4g} / {pq[2]:.4g}"
+                  f"   change {cq[0]:.4g} / {cq[1]:.4g} / {cq[2]:.4g}"
+                  f"   median {delta:+.1%}   change wins {wins}/{a.pairs}")
+    finally:
+        for path in made:
+            subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", path],
+                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    print(f"logs in {work}")
+
+
+if __name__ == "__main__":
+    main()
