@@ -118,33 +118,45 @@ final class GraftClient(val spark: SparkSession) {
           .options(pp.map { case (p, v) => s"kafka.$p" -> v })
           .option("topic", topic)
           .save()
-      case JdbcSink(url, table, user, password, mode) =>
-        if (mode == "upsert")
-          graft.engine.JdbcUpsert.upsert(read(), url, table, user, password,
-            desc.keys.getOrElse(throw new IllegalArgumentException(
-              "JdbcSink upsert mode requires table keys")))
-        else read().write.format("jdbc")
-          .option("url", url).option("dbtable", table)
-          .option("user", user).option("password", password)
-          .mode(mode).save()
       case BucketedTableSink(table, n, bucketCols, sortCols, path, format) =>
         var w = read().write.format(format).mode("overwrite")
           .bucketBy(n, bucketCols.head, bucketCols.tail: _*)
         if (sortCols.nonEmpty) w = w.sortBy(sortCols.head, sortCols.tail: _*)
         path.foreach(p => w = w.option("path", p))
         w.saveAsTable(table)
-      case HiveSink(database, table, format, mode, partCols) =>
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
-        val w = read().write.format(format).mode(mode)
+      case s @ (_: JdbcSink | _: HiveSink | _: RedisSink | _: PrometheusSink) =>
+        writer(desc, s)(read())
+    }
+  }
+
+  /** The write of one DataFrame into a JDBC, Hive, Redis or Prometheus
+    * sink, shared by [[materialize]] and [[materializeStream]] (which
+    * runs it per micro-batch); key requirements are checked up front.
+    */
+  private def writer(desc: TableDescriptor, sink: Sink): DataFrame => Unit = sink match {
+    case JdbcSink(url, table, user, password, mode) =>
+      if (mode == "upsert") {
+        val keys = desc.keys.getOrElse(throw new IllegalArgumentException(
+          "JdbcSink upsert mode requires table keys"))
+        df => graft.engine.JdbcUpsert.upsert(df, url, table, user, password, keys)
+      } else df => df.write.format("jdbc")
+        .option("url", url).option("dbtable", table)
+        .option("user", user).option("password", password)
+        .mode(mode).save()
+    case HiveSink(database, table, format, mode, partCols) =>
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
+      df => {
+        val w = df.write.format(format).mode(mode)
         (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
           .saveAsTable(s"$database.$table")
-      case rs: RedisSink =>
-        // One SET per (row, feature) under the key_expr-derived physical
-        // key, executed per partition through the pluggable client
-        // (ref: redis_sink.py + flink table_builder/redis_utils.py:80-107).
-        val df = read()
-        val keys = desc.keys.getOrElse(throw new IllegalArgumentException(
-          "RedisSink requires table keys"))
+      }
+    case rs: RedisSink =>
+      // One SET per (row, feature) under the key_expr-derived physical
+      // key, executed per partition through the pluggable client
+      // (ref: redis_sink.py + flink table_builder/redis_utils.py:80-107).
+      val keys = desc.keys.getOrElse(throw new IllegalArgumentException(
+        "RedisSink requires table keys"))
+      df => {
         val featureNames = df.columns.toSeq
           .filterNot(keys.contains).filterNot(desc.timestampField.contains)
         val (withKeys, keyCols) = graft.engine.RedisKeys
@@ -160,27 +172,31 @@ final class GraftClient(val spark: SparkSession) {
             }
           }
         }
-      case ps: PrometheusSink =>
-        // Numeric non-key columns push as gauges, keys become labels, and
-        // the table's timestamp field (when numeric) the sample timestamp
-        // (ref: prometheus_sink.py — the reference pushes each row the
-        // same way via the Flink Prometheus reporter).
-        val df = read()
-        val keys = desc.keys.getOrElse(Nil)
+      }
+    case ps: PrometheusSink =>
+      // Numeric non-key columns push as gauges, keys become labels, and
+      // the table's timestamp field (when numeric) the sample timestamp
+      // (ref: prometheus_sink.py — the reference pushes each row the
+      // same way via the Flink Prometheus reporter).
+      val keys = desc.keys.getOrElse(Nil)
+      df => {
         val numeric = df.schema.fields.collect {
           case f if !keys.contains(f.name) && !desc.timestampField.contains(f.name) &&
             f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
         }.toSeq
         PrometheusPush.push(ps, MetricStore.exposition(
           df.collect().toSeq, numeric, keys, desc.name, desc.timestampField))
-    }
+      }
+    case other =>
+      throw new IllegalArgumentException(s"$other has no per-DataFrame writer")
   }
 
   /** ETL write for unbounded descriptors: starts a Structured Streaming
     * query and returns its handle (the reference returns a ProcessorJob,
     * ref: python/feathub/processors/processor_job.py). PrintSink → console,
     * BlackHoleSink → noop, MemoryStoreSink → per-batch upsert via
-    * foreachBatch.
+    * foreachBatch; JDBC, Hive, Redis and Prometheus sinks run the batch
+    * writer per micro-batch.
     */
   def materializeStream(
       desc: TableDescriptor,
@@ -214,64 +230,19 @@ final class GraftClient(val spark: SparkSession) {
           .options(pp.map { case (p, v) => s"kafka.$p" -> v })
           .option("topic", topic)
           .start()
-      case JdbcSink(url, table, user, password, mode) =>
-        // streaming JDBC goes through foreachBatch (no native jdbc stream sink);
-        // upsert is the natural streaming mode — each microbatch lands its
-        // latest values per key (the CDC-style continuously-updated table)
-        EventTime.drop(df).writeStream.option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (mode == "upsert")
-              graft.engine.JdbcUpsert.upsert(batch, url, table, user, password,
-                desc.keys.getOrElse(throw new IllegalArgumentException(
-                  "JdbcSink upsert mode requires table keys")))
-            else batch.write.format("jdbc")
-              .option("url", url).option("dbtable", table)
-              .option("user", user).option("password", password)
-              .mode(mode).save()
-          }.start()
       case s: BucketedTableSink =>
         throw new IllegalArgumentException(
           s"BucketedTableSink(${s.table}) is batch-only — bucketBy requires a table write")
-      case HiveSink(database, table, format, _, partCols) =>
-        spark.sql(s"CREATE DATABASE IF NOT EXISTS $database")
+      case s @ (_: JdbcSink | _: HiveSink | _: RedisSink | _: PrometheusSink) =>
+        // no native stream sink: each micro-batch goes through the batch
+        // writer. Hive appends per micro-batch; JDBC upsert, the natural
+        // streaming mode, lands each micro-batch's latest values per key.
+        val write = writer(desc, s match {
+          case h: HiveSink => h.copy(mode = "append")
+          case other => other
+        })
         EventTime.drop(df).writeStream.option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val w = batch.write.format(format).mode("append")
-            (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-              .saveAsTable(s"$database.$table")
-          }.start()
-      case rs: RedisSink =>
-        val keys = desc.keys.getOrElse(throw new IllegalArgumentException(
-          "RedisSink requires table keys"))
-        EventTime.drop(df).writeStream.option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val featureNames = batch.columns.toSeq
-              .filterNot(keys.contains).filterNot(desc.timestampField.contains)
-            val (withKeys, keyCols) = graft.engine.RedisKeys
-              .appendPhysicalKeyColumns(batch, rs.keyExpr, rs.namespace, keys, featureNames)
-            val pairs = featureNames.zip(keyCols)
-            withKeys.foreachPartition { (it: Iterator[Row]) =>
-              val store = RedisClients.provider(rs)
-              it.foreach { r =>
-                pairs.foreach { case (f, kc) =>
-                  val v = r.getAs[Any](f)
-                  val k = r.getAs[String](kc)
-                  if (v != null && k != null) store.put(k, String.valueOf(v))
-                }
-              }
-            }
-          }.start()
-      case ps: PrometheusSink =>
-        val keys = desc.keys.getOrElse(Nil)
-        EventTime.drop(df).writeStream.option("checkpointLocation", checkpointDir)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val numeric = batch.schema.fields.collect {
-              case f if !keys.contains(f.name) && !desc.timestampField.contains(f.name) &&
-                f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] => f.name
-            }.toSeq
-            PrometheusPush.push(ps, MetricStore.exposition(
-              batch.collect().toSeq, numeric, keys, desc.name, desc.timestampField))
-          }.start()
+          .foreachBatch { (batch: DataFrame, _: Long) => write(batch) }.start()
     }
   }
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming one-sided CUSUM drift alarm — the live twin of
@@ -17,10 +16,9 @@ import scala.concurrent.duration.Duration
   * (StreamingSpec asserts the parity).
   *
   * Late rows (at or below the watermark) are dropped by Spark's exec
-  * before this function runs, so every pending row has t >= 1 and
-  * finalization is the plain `t <= watermark` partition — the same
-  * discipline as [[StreamingEwma]], whose buffering skeleton this
-  * shares (see [[StreamingMsprt]]'s watermark-mechanics scaladoc).
+  * before the operator runs, so every pending row has t >= 1 and
+  * finalization is the plain `t <= watermark` partition — the
+  * shared [[KeyedFinalize]] loop (see its watermark-mechanics scaladoc).
   * NULL values are ignored.
   *
   * 100 TB shape: one shuffle on the key; per-key state is the lateness
@@ -28,10 +26,6 @@ import scala.concurrent.duration.Duration
   * across idle gaps (evicting S would silently re-arm a drifted key).
   */
 object StreamingCusum {
-
-  final case class CusumState(
-      pending: List[(Long, String, List[Any])], // (tMs, tieKey, out prefix)
-      s: BigInt)
 
   def monitor(
       df: DataFrame,
@@ -46,75 +40,21 @@ object StreamingCusum {
     require(df.isStreaming, "use ops.TimeSeries.cusumMonitor for batch")
     require(slackMicro >= 0, s"slackMicro $slackMicro must be >= 0")
     require(thresholdMicro > 0, s"thresholdMicro $thresholdMicro must be > 0")
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val valIdx = schema.fieldIndex(valueCol)
-
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
-    val outSchema = StructType(Seq(
-      schema(keyCol), schema(tieCol),
-      StructField("ts_ms", LongType, nullable = false),
+    val outSchema = KeyedFinalize.microSchema(df.schema, keyCol, tieCol,
       StructField("v_micro", LongType, nullable = false),
       StructField("s_micro", DecimalType(38, 0), nullable = false),
-      StructField("alarmed", BooleanType, nullable = false)))
+      StructField("alarmed", BooleanType, nullable = false))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[CusumState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[CusumState]) =>
-
-        var st = state.getOption.getOrElse(CusumState(Nil, BigInt(0)))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(valIdx) && !r.isNullAt(tIdx)) {
-            val t = r.getLong(tIdx)
-            if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-              val vMicro = math.floor(
-                r.get(valIdx).asInstanceOf[Number].doubleValue() * 1e6).toLong
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                List(r.get(keyIdx), r.get(tieIdx), t, vMicro)) :: st.pending)
-            }
-          }
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.MicroFold[BigInt](df.schema, keyCol, tieCol, valueCol) {
+        def zero: BigInt = BigInt(0)
+        def step(s: BigInt, t: Long, m: KeyedFinalize.Micro, out: ArrayBuffer[Row]): BigInt = {
+          val sNew = (s + m.v - refMeanMicro - slackMicro).max(BigInt(0))
+          out += Row(m.key, m.tie, t, m.v, new java.math.BigDecimal(sNew.bigInteger),
+            sNew > BigInt(thresholdMicro))
+          sNew
         }
-
-        // plain t <= watermark finalization — pending rows always have
-        // t >= 1 (Spark's exec drops eventTime <= watermark first), so
-        // no watermark-0 case exists (see [[StreamingMsprt]] scaladoc)
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = ready.sortBy(p => (p._1, p._2)).map { case (_, _, prefix) =>
-          val vMicro = prefix(3).asInstanceOf[Long]
-          val sNew = (st.s + BigInt(vMicro) - refMeanMicro - slackMicro)
-            .max(BigInt(0))
-          st = st.copy(s = sNew)
-          Row.fromSeq(prefix :+
-            new java.math.BigDecimal(sNew.bigInteger) :+
-            (sNew > BigInt(thresholdMicro)))
-        }
-
-        if (st.pending.isEmpty && st.s == BigInt(0)) {
-          state.remove()
-        } else {
-          state.update(st)
-          st.pending.map(_._1).minOption.foreach { nextT =>
-            state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-          }
-        }
-        out.iterator
-    }(Encoders.kryo[CusumState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, tieCol, "ts_ms", "v_micro", "s_micro", "alarmed")
+        def keep(s: BigInt, watermark: Long): Boolean = s != 0
+      })
   }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming exact deduplication on an unbounded source — the streaming
@@ -33,39 +33,6 @@ import scala.concurrent.duration.Duration
   */
 object StreamingDedup {
 
-  /** `GroupState.getCurrentWatermarkMs` returns 0 until the FIRST
-    * watermark advance — rows seen then are pre-watermark admissions,
-    * not late data, so every admission guard must let them through
-    * (`t > watermark || watermark == NoWatermarkYet`). Shared by every
-    * stateful operator in this package so the watermark-zero semantics
-    * stay discoverable in one place.
-    */
-  private[streaming] val NoWatermarkYet = 0L
-
-  /** (lastSeenMs, pendingRows as (tMs, orderKey, row values)). */
-  final case class DedupState(
-      lastSeen: Option[Long],
-      pending: List[(Long, String, List[Any])])
-
-  /** Sortable fixed-width encoding so the orderCol tie-break is a total
-    * order for the supported id types (numeric and string).
-    */
-  private[streaming] def orderKey(v: Any): String = v match {
-    case null => "0"
-    case n: Byte => orderKey(n.toLong)
-    case n: Short => orderKey(n.toLong)
-    case n: Int => orderKey(n.toLong)
-    case n: Long =>
-      // flip the sign bit and render unsigned zero-padded, so negative ids
-      // sort before positive and the lexicographic order is the numeric one
-      val u = java.lang.Long.toUnsignedString(n ^ Long.MinValue)
-      "1" + "0" * (20 - u.length) + u
-    case s: String => s"2$s"
-    case other =>
-      throw new IllegalArgumentException(
-        s"unsupported orderCol type ${other.getClass.getName}; use a numeric or string id")
-  }
-
   def markDuplicates(
       df: DataFrame,
       keyCols: Seq[String],
@@ -76,70 +43,29 @@ object StreamingDedup {
     require(df.isStreaming, "use ops.Dedup for batch inputs")
     require(keyCols.nonEmpty, "markDuplicates needs at least one key column")
     val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex)
     val ordIdx = schema.fieldIndex(orderCol)
     val horizonMs = horizon.toMillis
     require(horizonMs > 0, "horizon must be positive")
-
-    // millis column appended AFTER index computation so field indexes on
-    // the original row stay valid
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length // position of __ts_ms__
-
     val outSchema = StructType(schema.fields :+ StructField("is_dup", BooleanType, nullable = false))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      keyIdx.map { i =>
-        if (r.isNullAt(i)) "N"
-        else { val s = String.valueOf(r.get(i)); s"S${s.length}:$s" }
-      }.mkString("|")
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[DedupState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[DedupState]) =>
-
-        var st = state.getOption.getOrElse(DedupState(None, Nil))
-        val watermark = state.getCurrentWatermarkMs()
-
-        // buffer arrivals; rows at or below the watermark are late → dropped
-        rows.foreach { r =>
-          val t = r.getLong(tIdx)
-          if (t > watermark || watermark == NoWatermarkYet) {
-            st = st.copy(pending =
-              (t, orderKey(if (r.isNullAt(ordIdx)) null else r.get(ordIdx)),
-                r.toSeq.toList.take(schema.length)) :: st.pending)
-          }
-        }
-
-        // finalize rows the watermark has passed, in (event time, id) order
-        val (ready, stillPending) = st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = ready.sortBy(p => (p._1, p._2)).map { case (t, _, rowVals) =>
-          val isDup = st.lastSeen.exists(prev => t - prev <= horizonMs)
+    // the accumulator is the last seen event time; buffered rows keep their values
+    KeyedFinalize(df, keyCols, tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.Fold[Option[Long], List[Any]] {
+        def zero: Option[Long] = None
+        def admit(r: Row, t: Long): Option[(String, List[Any])] =
+          Some(KeyedFinalize.orderKey(r.get(ordIdx)) -> r.toSeq.toList.take(schema.length))
+        def step(lastSeen: Option[Long], t: Long, rowVals: List[Any],
+            out: ArrayBuffer[Row]): Option[Long] = {
+          out += Row.fromSeq(rowVals :+ lastSeen.exists(prev => t - prev <= horizonMs))
           // sliding refresh: every copy extends the horizon, matching
           // dropDuplicatesWithinWatermark's state-retention rule
-          st = st.copy(lastSeen = Some(st.lastSeen.fold(t)(math.max(_, t))))
-          Row.fromSeq(rowVals :+ isDup)
+          Some(lastSeen.fold(t)(math.max(_, t)))
         }
-
-        val horizonDead = st.lastSeen.forall(_ + horizonMs <= watermark)
-        if (st.pending.isEmpty && horizonDead) {
-          state.remove()
-        } else {
-          state.update(st)
-          // wake when the watermark passes the oldest pending row, or the
-          // horizon after the last occurrence for final state eviction
-          val nextT = st.pending.map(_._1).minOption
-            .getOrElse(st.lastSeen.get + horizonMs)
-          state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-        }
-        out.iterator
-    }(Encoders.kryo[DedupState], Encoders.row(outSchema))
-
-    flat.toDF()
+        // evicted a horizon after the last occurrence
+        def keep(lastSeen: Option[Long], watermark: Long): Boolean =
+          lastSeen.exists(_ + horizonMs > watermark)
+        override def wake(lastSeen: Option[Long]): Option[Long] = lastSeen.map(_ + horizonMs)
+      })
   }
 
   /** Drop variant: only the event-time-first copy of each key within the

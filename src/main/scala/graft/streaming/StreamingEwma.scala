@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming exact binary-decay EWMA — the unbounded counterpart of
@@ -24,7 +23,7 @@ import scala.concurrent.duration.Duration
   * EventTimeTimeout late filter drops eventTime ≤ watermark and the
   * watermark floor is 0, so every pending row has t ≥ 1, finalization
   * is the plain `t <= watermark` partition (a watermark-0 special case
-  * would be dead code — see [[StreamingMsprt]]'s watermark-mechanics
+  * would be dead code — see [[KeyedFinalize]]'s watermark-mechanics
   * scaladoc), and the batch-parity contract covers t ≥ 1
   * (StreamingEwmaSpec pins both sides of the boundary).
   *
@@ -34,10 +33,6 @@ import scala.concurrent.duration.Duration
   * gaps to stay batch-equivalent; evicting it would restart the decay).
   */
 object StreamingEwma {
-
-  final case class EwmaState(
-      pending: List[(Long, String, List[Any])], // (tMs, tieKey, out prefix)
-      hist: List[Long]) // most-recent-first v_micro, length <= lookback
 
   def ewmaPow2(
       df: DataFrame,
@@ -50,57 +45,18 @@ object StreamingEwma {
     require(df.isStreaming, "use ops.TimeSeries.ewmaPow2 for batch inputs")
     require(lookback >= 1 && lookback <= 40,
       s"lookback $lookback must lie in [1, 40]")
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val valIdx = schema.fieldIndex(valueCol)
-
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
-    val outSchema = StructType(Seq(
-      schema(keyCol), schema(tieCol),
-      StructField("ts_ms", LongType, nullable = false),
+    val outSchema = KeyedFinalize.microSchema(df.schema, keyCol, tieCol,
       StructField("v_micro", LongType, nullable = false),
       StructField("ewma_num", DecimalType(38, 0), nullable = false),
-      StructField("ewma_den", LongType, nullable = false)))
+      StructField("ewma_den", LongType, nullable = false))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[EwmaState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[EwmaState]) =>
-
-        var st = state.getOption.getOrElse(EwmaState(Nil, Nil))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(valIdx) && !r.isNullAt(tIdx)) {
-            val t = r.getLong(tIdx)
-            if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-              val vMicro = math.floor(
-                r.get(valIdx).asInstanceOf[Number].doubleValue() * 1e6).toLong
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                List(r.get(keyIdx), r.get(tieIdx), t, vMicro)) :: st.pending)
-            }
-          }
-        }
-
-        // plain t <= watermark finalization — pending rows always have
-        // t >= 1 (Spark's exec drops eventTime <= watermark first), so
-        // no watermark-0 case exists (see [[StreamingMsprt]] scaladoc)
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = ready.sortBy(p => (p._1, p._2)).map { case (_, _, prefix) =>
-          val vMicro = prefix(3).asInstanceOf[Long]
-          val seq = vMicro :: st.hist // current first, then newest-first lags
+    // the accumulator is the most-recent-first v_micro history, length <= lookback
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.MicroFold[List[Long]](df.schema, keyCol, tieCol, valueCol) {
+        def zero: List[Long] = Nil
+        def step(hist: List[Long], t: Long, m: KeyedFinalize.Micro,
+            out: ArrayBuffer[Row]): List[Long] = {
+          val seq = m.v :: hist // current first, then newest-first lags
           // BigInt accumulation, emitted as decimal(38,0): v_micro·2^L
           // wraps int64 past |value| ≈ 8 at lookback=40 — same contract
           // as the batch operator (TimeSeries.ewmaPow2).
@@ -111,24 +67,11 @@ object StreamingEwma {
             num += BigInt(v) * w
             den += w
           }
-          st = st.copy(hist = seq.take(lookback))
-          Row.fromSeq(prefix :+
-            new java.math.BigDecimal(num.bigInteger) :+ den)
+          out += Row(m.key, m.tie, t, m.v, new java.math.BigDecimal(num.bigInteger), den)
+          seq.take(lookback)
         }
-
-        if (st.pending.isEmpty && st.hist.isEmpty) {
-          state.remove()
-        } else {
-          state.update(st)
-          // wake when the watermark passes the oldest pending row; with no
-          // pending rows the O(L) history just sits in state, timer-free
-          st.pending.map(_._1).minOption.foreach { nextT =>
-            state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-          }
-        }
-        out.iterator
-    }(Encoders.kryo[EwmaState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, tieCol, "ts_ms", "v_micro", "ewma_num", "ewma_den")
+        // with no pending rows the O(L) history just sits in state, timer-free
+        def keep(hist: List[Long], watermark: Long): Boolean = hist.nonEmpty
+      })
   }
 }

@@ -1,11 +1,11 @@
 package graft.streaming
 
 import graft.ops.Dedup
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming MinHash+LSH near-duplicate CANDIDATE feed — the unbounded
@@ -53,10 +53,9 @@ import scala.concurrent.duration.Duration
   */
 object StreamingLsh {
 
-  /** retained/pending entries are (tMs, orderKey, id value). */
-  final case class LshBucketState(
+  /** Retained docs as (tMs, orderKey, id value), newest first. */
+  private[streaming] final case class LshBucket(
       retained: List[(Long, String, Any)],
-      pending: List[(Long, String, Any)],
       quarantined: Boolean)
 
   def candidatePairs(
@@ -86,13 +85,10 @@ object StreamingLsh {
       val parts = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
       struct(lit(b).as("band"), md5(concat_ws("|", parts: _*)).as("bucket"))
     }
-    // __ts (the watermark-tagged column) rides along untouched: Spark
-    // requires it to reach the stateful operator for event-time timeouts
     val bb = sigs
-      .withWatermark("__ts", s"${lateness.toMillis} milliseconds")
       .select(col("__id"), col("__ts"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("__id"), unix_millis(col("__ts")).as("__tms"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"), col("__ts"))
+      .select(col("__id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"),
+        col("__ts"))
 
     val outSchema = StructType(Seq(
       StructField("id_a", idType),
@@ -100,33 +96,15 @@ object StreamingLsh {
       StructField("band", IntegerType, nullable = false),
       StructField("ts_ms", LongType, nullable = false)))
 
-    val grouped = bb.groupByKey { r: Row =>
-      s"${r.getAs[Int]("band")}|${r.getAs[String]("bucket")}"
-    }(Encoders.STRING)
-
-    val out = grouped.flatMapGroupsWithState[LshBucketState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (key: String, rows: Iterator[Row], state: GroupState[LshBucketState]) =>
-
-        var st = state.getOption.getOrElse(LshBucketState(Nil, Nil, quarantined = false))
-        val watermark = state.getCurrentWatermarkMs()
-        val band = key.takeWhile(_ != '|').toInt
-
-        // buffer arrivals; rows at or below the watermark are late → dropped
-        rows.foreach { r =>
-          val t = r.getLong(1)
-          if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-            st = st.copy(pending =
-              (t, StreamingDedup.orderKey(if (r.isNullAt(0)) null else r.get(0)),
-                r.get(0)) :: st.pending)
-          }
-        }
-
-        // finalize rows the watermark has passed, in (event time, id) order
-        val (ready, stillPending) = st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val emitted = List.newBuilder[Row]
-        ready.sortBy(p => (p._1, p._2)).foreach { case (t, ord, id) =>
+    // keyed by (band, bucket); buffered rows keep (id, band)
+    KeyedFinalize(bb, Seq("band", "bucket"), "__ts", lateness.toMillis, outSchema,
+      new KeyedFinalize.Fold[LshBucket, (Any, Int)] {
+        def zero: LshBucket = LshBucket(Nil, quarantined = false)
+        def admit(r: Row, t: Long): Option[(String, (Any, Int))] =
+          Some(KeyedFinalize.orderKey(r.get(0)) -> (r.get(0), r.getInt(1)))
+        def step(st: LshBucket, t: Long, p: (Any, Int), out: ArrayBuffer[Row]): LshBucket = {
+          val (id, band) = p
+          val doc = (t, KeyedFinalize.orderKey(id), id)
           // horizon eviction relative to the doc entering
           val live = st.retained.filter(_._1 >= t - horizonMs)
           if (st.quarantined) {
@@ -134,35 +112,25 @@ object StreamingLsh {
             // doc still within horizon of it keeps the quarantine alive
             // (and becomes the new marker); one arriving after a full
             // horizon of silence resets the bucket to normal service.
-            if (live.isEmpty) st = st.copy(retained = List((t, ord, id)), quarantined = false)
-            else st = st.copy(retained = List((t, ord, id)))
+            LshBucket(List(doc), quarantined = live.nonEmpty)
           } else if (live.length + 1 > maxBucket) {
             // hot bucket: quarantine BEFORE pairing — the forward-only
             // analogue of the batch maxBucket exclusion (the doc that
             // overflows the cap emits nothing, like every doc after it
             // until the bucket goes horizon-idle)
-            st = st.copy(retained = List((t, ord, id)), quarantined = true)
+            LshBucket(List(doc), quarantined = true)
           } else {
-            live.sortBy(p => (p._1, p._2)).foreach { case (_, _, earlierId) =>
-              emitted += Row(earlierId, id, band, t)
+            live.sortBy(e => (e._1, e._2)).foreach { case (_, _, earlierId) =>
+              out += Row(earlierId, id, band, t)
             }
-            st = st.copy(retained = (t, ord, id) :: live)
+            LshBucket(doc :: live, quarantined = false)
           }
         }
-
-        val newest = st.retained.map(_._1).maxOption
-        if (st.pending.isEmpty && newest.forall(_ + horizonMs <= watermark)) {
-          state.remove()
-        } else {
-          state.update(st)
-          val nextT = st.pending.map(_._1).minOption
-            .orElse(newest.map(_ + horizonMs))
-            .getOrElse(watermark + 1)
-          state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-        }
-        emitted.result().iterator
-    }(Encoders.kryo[LshBucketState], Encoders.row(outSchema))
-
-    out.toDF()
+        // evicted a horizon after the newest retained doc
+        def keep(st: LshBucket, watermark: Long): Boolean =
+          st.retained.exists(_._1 + horizonMs > watermark)
+        override def wake(st: LshBucket): Option[Long] =
+          st.retained.map(_._1).maxOption.map(_ + horizonMs)
+      })
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming mixture SPRT — the unbounded twin of
@@ -29,40 +28,19 @@ import scala.concurrent.duration.Duration
   * 100 TB shape: one shuffle on the key; per-key state is the lateness
   * buffer plus three scalars — horizon-free.
   *
-  * Watermark mechanics at epoch 0 (shared by every
-  * flatMapGroupsWithState twin here, verified against Spark 4.1.2
-  * bytecode): `GroupState.getCurrentWatermarkMs` returns 0 both before
-  * the first watermark is computed AND for a genuine epoch-0 watermark
-  * — Spark exposes no third state — but the distinction is MOOT inside
-  * this function, because Spark's own exec drops late input before the
-  * function runs with the predicate `eventTime <= watermark`
-  * (WatermarkSupport.watermarkExpression builds a `LessThanOrEqual`;
-  * the watermark floor is 0). A row stamped exactly
-  * 1970-01-01T00:00:00Z (t = 0 ms) is therefore dropped BY SPARK on
-  * arrival in every micro-batch — no GroupState-level code can ever
-  * see it — and every row that does arrive has t >= watermark + 1 >= 1.
-  * Consequently pending rows always satisfy t >= 1, finalization is the
-  * plain unconditional `t <= watermark` partition (the old
-  * `watermark == 0 -> finalize nothing` special case was dead code —
-  * at watermark 0 the partition releases nothing anyway), the
-  * batch-parity contract covers t >= 1 (StreamingMsprtSpec pins both
-  * facts), and rows inside the lateness window of a never-advancing
-  * watermark stay pending — standard watermark semantics, identical to
-  * Spark's own stateful aggregations.
+  * Watermark mechanics at epoch 0 (shared by every twin on the
+  * [[KeyedFinalize]] loop, whose scaladoc has the Spark 4.1.2
+  * details): Spark's own exec drops `eventTime <= watermark` before the
+  * operator runs, with a watermark floor of 0, so a row stamped exactly
+  * 1970-01-01T00:00:00Z never reaches it, every pending row has t >= 1,
+  * finalization is the plain unconditional `t <= watermark` partition,
+  * and the batch-parity contract covers t >= 1 (StreamingMsprtSpec pins
+  * both facts).
   */
 object StreamingMsprt {
 
-  /** Shared pre-watermark admission sentinel — see
-    * [[StreamingDedup.NoWatermarkYet]].
-    */
-  private val NoWatermarkYet = StreamingDedup.NoWatermarkYet
-
-  final case class MsprtState(
-      pending: List[(Long, String, Boolean)], // (tMs, tieKey, outcome)
-      d: Long,
-      n: Long,
-      decided: Boolean,
-      key: Any)
+  /** Integer core D_n and step; `decided` is the tombstone. */
+  private[streaming] final case class MsprtAcc(d: Long, n: Long, decided: Boolean)
 
   /** The batch operator's lnΛ milli floor — one shared double tree. */
   def lamMilli(n: Long, d: Long, p0Micro: Long, tau2Micro: Long): Long = {
@@ -97,11 +75,6 @@ object StreamingMsprt {
     val tieIdx = schema.fieldIndex(tieCol)
     val outIdx = schema.fieldIndex(outcomeCol)
 
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
     val outSchema = StructType(Seq(
       schema(keyCol),
       StructField("ts_ms", LongType, nullable = false),
@@ -109,63 +82,23 @@ object StreamingMsprt {
       StructField("lnlam_at_decision_milli", LongType, nullable = false),
       StructField("decision", StringType, nullable = false)))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[MsprtState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[MsprtState]) =>
-
-        var st = state.getOption.getOrElse(
-          MsprtState(Nil, 0L, 0L, decided = false, key = null))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(outIdx) && !r.isNullAt(tIdx)) {
-            if (st.key == null) st = st.copy(key = r.get(keyIdx))
-            val t = r.getLong(tIdx)
-            if (!st.decided &&
-                (t > watermark || watermark == NoWatermarkYet)) {
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                r.get(outIdx).asInstanceOf[Boolean]) :: st.pending)
-            }
-          }
+    // buffered rows keep (key, outcome)
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.Fold[MsprtAcc, (Any, Boolean)] {
+        def zero: MsprtAcc = MsprtAcc(0L, 0L, decided = false)
+        def admit(r: Row, t: Long): Option[(String, (Any, Boolean))] =
+          if (r.isNullAt(keyIdx) || r.isNullAt(outIdx)) None
+          else Some(KeyedFinalize.orderKey(r.get(tieIdx)) ->
+            (r.get(keyIdx), r.getBoolean(outIdx)))
+        def step(a: MsprtAcc, t: Long, p: (Any, Boolean), out: ArrayBuffer[Row]): MsprtAcc = {
+          val d = a.d + (if (p._2) 1000000L - p0Micro else -p0Micro)
+          val n = a.n + 1
+          val lam = lamMilli(n, d, p0Micro, tau2Micro)
+          if (lam >= thrMilli) out += Row(p._1, t, n, lam, "reject_h0")
+          MsprtAcc(d, n, decided = lam >= thrMilli)
         }
-
-        // plain t <= watermark finalization: Spark's exec late-filters
-        // eventTime <= watermark before this function, so pending rows
-        // always have t >= 1 and a watermark-0 special case would be
-        // dead code (see the watermark-mechanics scaladoc)
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-
-        val out = scala.collection.mutable.ListBuffer.empty[Row]
-        ready.sortBy(p => (p._1, p._2)).foreach { case (t, _, outcome) =>
-          if (!st.decided) {
-            val d = st.d +
-              (if (outcome) 1000000L - p0Micro else -p0Micro)
-            val n = st.n + 1
-            st = st.copy(d = d, n = n)
-            val lam = lamMilli(n, d, p0Micro, tau2Micro)
-            if (lam >= thrMilli) {
-              out += Row(st.key, t, n, lam, "reject_h0")
-              st = st.copy(decided = true, pending = Nil)
-            }
-          }
-        }
-
-        state.update(st)
-        st.pending.map(_._1).minOption.foreach { nextT =>
-          state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-        }
-        out.iterator
-    }(Encoders.kryo[MsprtState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, "ts_ms", "n_at_decision", "lnlam_at_decision_milli",
-      "decision")
+        def keep(a: MsprtAcc, watermark: Long): Boolean = true
+        override def closed(a: MsprtAcc): Boolean = a.decided
+      })
   }
 }

@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.engine.EventTime
 import graft.table.AggFunc
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Structured-Streaming per-row trailing-window (OVER) aggregation — the
   * unbounded analogue of [[graft.engine.OverWindows]] and of the
@@ -65,12 +66,8 @@ object StreamingOverWindows {
   final case class Entry(t: Long, vs: List[Any], ms: List[Boolean])
       extends Serializable
 
-  final case class OverState(
-      keyVals: List[Any],
-      seq: Long,
-      pending: List[(Long, Long, List[Any])], // (t, arrival seq, row values)
-      hist: Vector[Entry],
-      accs: List[RunAcc]) extends Serializable
+  /** Finalized history and the unbounded features' accumulators. */
+  private[streaming] final case class OverAcc(hist: Vector[Entry], accs: List[RunAcc])
 
   private def cmp(a: Any, b: Any): Int = (a, b) match {
     case (x: Number, y: Number)   => java.lang.Double.compare(x.doubleValue(), y.doubleValue())
@@ -160,8 +157,6 @@ object StreamingOverWindows {
       maxOutOfOrdernessMs: Long): DataFrame = {
     require(input.isStreaming, "use OverWindows for batch inputs")
     val schema = input.schema
-    val keyIdx = keys.map(schema.fieldIndex)
-    val tIdx = schema.fieldIndex(EventTime.Col)
     val vIdx = feats.indices.map(i => schema.fieldIndex(s"__v_$i"))
     val mIdx = feats.indices.map(i => schema.fieldIndex(s"__m_$i"))
     val helperIdx = (vIdx ++ mIdx).toSet
@@ -188,60 +183,32 @@ object StreamingOverWindows {
     val unbounded = feats.map(f => f.windowMs.isEmpty && f.limit.isEmpty)
     val keepVals = feats.map(f =>
       f.agg == AggFunc.CollectList || f.agg == AggFunc.ValueCounts)
-    val horizonMs = feats.flatMap(_.windowMs) match {
-      case Nil => 0L
-      case ws  => ws.max
-    }
     val nFeats = feats.length
 
     // __event_ts__ is appended AFTER the index computations above, so every
     // precomputed field index stays valid; it is simply absent from outIdx.
     val withTs = input
       .withColumn("__event_ts__", timestamp_millis(col(EventTime.Col)))
-      .withWatermark("__event_ts__", s"$maxOutOfOrdernessMs milliseconds")
 
-    val grouped = withTs.groupByKey { r: Row =>
-      keyIdx.map { i =>
-        if (r.isNullAt(i)) "N"
-        else { val s = String.valueOf(r.get(i)); s"S${s.length}:$s" }
-      }.mkString("|")
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[OverState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[OverState]) =>
-
-        var st = state.getOption.getOrElse(
-          OverState(Nil, 0L, Nil, Vector.empty, List.fill(nFeats)(emptyAcc)))
-        val watermark = state.getCurrentWatermarkMs()
-
-        // buffer arrivals; rows at or below the watermark are late → dropped
-        rows.foreach { r =>
-          if (st.keyVals.isEmpty) st = st.copy(keyVals = keyIdx.map(r.get).toList)
-          val t = r.getLong(tIdx)
-          if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-            st = st.copy(
-              seq = st.seq + 1,
-              pending = (t, st.seq, r.toSeq.toList) :: st.pending)
-          }
-        }
-
-        // finalize rows the watermark has passed, in event-time order
-        val (ready, stillPending) = st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-        ready.sortBy(p => (p._1, p._2)).foreach { case (t, _, rowVals) =>
+    // no tie column: a constant tie lets arrival order break event-time ties
+    KeyedFinalize(withTs, keys, "__event_ts__", maxOutOfOrdernessMs, outSchema,
+      new KeyedFinalize.Fold[OverAcc, List[Any]] {
+        def zero: OverAcc = OverAcc(Vector.empty, List.fill(nFeats)(emptyAcc))
+        def admit(r: Row, t: Long): Option[(String, List[Any])] =
+          Some("" -> r.toSeq.toList.take(schema.length))
+        def step(a: OverAcc, t: Long, rowVals: List[Any], out: ArrayBuffer[Row]): OverAcc = {
           val vs = vIdx.map(rowVals(_)).toList
           val ms = mIdx.map(i => rowVals(i).asInstanceOf[Boolean]).toList
-          st = st.copy(hist = st.hist :+ Entry(t, vs, ms))
+          var hist = a.hist :+ Entry(t, vs, ms)
+          var accs = a.accs
           val values = feats.indices.map { i =>
             val f = feats(i)
             if (unbounded(i)) {
-              val acc = foldAcc(st.accs(i), vs(i), ms(i), keepVals(i))
-              st = st.copy(accs = st.accs.updated(i, acc))
+              val acc = foldAcc(accs(i), vs(i), ms(i), keepVals(i))
+              accs = accs.updated(i, acc)
               accResult(f, acc, integral(i))
             } else {
-              var frame = st.hist.collect { case e if e.ms(i) => (e.t, e.vs(i)) }
+              var frame = hist.collect { case e if e.ms(i) => (e.t, e.vs(i)) }
               f.limit.foreach(n => frame = frame.takeRight(n))
               f.windowMs.foreach(d => frame = frame.filter(_._1 >= t - d))
               frameResult(f, frame, integral(i))
@@ -251,39 +218,26 @@ object StreamingOverWindows {
 
           // evict history no future frame can reach: older than the time
           // horizon and than every limit's n-th-newest qualifying row
-          if (st.hist.nonEmpty) {
-            val thresholds = feats.indices.flatMap { i =>
-              val f = feats(i)
-              if (unbounded(i)) None
-              else {
-                val timeTh = f.windowMs.map(d => t - d)
-                val limitTh = f.limit.map { n =>
-                  val qual = st.hist.collect { case e if e.ms(i) => e.t }
-                  if (qual.size < n) Long.MinValue else qual(qual.size - n)
-                }
-                Seq(timeTh, limitTh).flatten.reduceOption(_ min _)
+          val thresholds = feats.indices.flatMap { i =>
+            val f = feats(i)
+            if (unbounded(i)) None
+            else {
+              val timeTh = f.windowMs.map(d => t - d)
+              val limitTh = f.limit.map { n =>
+                val qual = hist.collect { case e if e.ms(i) => e.t }
+                if (qual.size < n) Long.MinValue else qual(qual.size - n)
               }
-            }
-            if (thresholds.nonEmpty) {
-              val cut = thresholds.min
-              st = st.copy(hist = st.hist.filter(_.t >= cut))
+              Seq(timeTh, limitTh).flatten.reduceOption(_ min _)
             }
           }
-        }
-
-        if (st.pending.isEmpty && st.hist.isEmpty &&
-            st.accs.forall(_.rows == 0L)) {
-          state.remove()
-        } else {
-          state.update(st)
-          // wake when the watermark passes the oldest pending row
-          st.pending.map(_._1).minOption.foreach { nextT =>
-            state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
+          if (thresholds.nonEmpty) {
+            val cut = thresholds.min
+            hist = hist.filter(_.t >= cut)
           }
+          OverAcc(hist, accs)
         }
-        out.iterator
-    }(Encoders.kryo[OverState], Encoders.row(outSchema))
-
-    flat.toDF()
+        def keep(a: OverAcc, watermark: Long): Boolean =
+          a.hist.nonEmpty || a.accs.exists(_.rows != 0L)
+      })
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming Page–Hinkley change detector — the live twin of
@@ -22,10 +21,9 @@ import scala.concurrent.duration.Duration
   * (`ph_micro > lambdaMicro`).
   *
   * Late rows (at or below the watermark) are dropped by Spark's exec
-  * before this function runs — plain `t <= watermark` finalization,
-  * the [[StreamingCusum]] / [[StreamingEwma]] buffering skeleton (see
-  * [[StreamingMsprt]]'s watermark-mechanics scaladoc). NULL values are
-  * ignored.
+  * before the operator runs — plain `t <= watermark` finalization by
+  * the shared [[KeyedFinalize]] loop (see its watermark-mechanics
+  * scaladoc). NULL values are ignored.
   *
   * 100 TB shape: one shuffle on the key; per-key state is the lateness
   * buffer plus FOUR integer accumulators (n, S, m, min m) — O(1)
@@ -35,12 +33,8 @@ import scala.concurrent.duration.Duration
   */
 object StreamingPageHinkley {
 
-  final case class PhState(
-      pending: List[(Long, String, List[Any])], // (tMs, tieKey, out prefix)
-      n: Long,
-      s: BigInt,
-      m: BigInt,
-      minM: BigInt)
+  /** Running count, sum, walk and walk minimum. */
+  private[streaming] final case class PhAcc(n: Long, s: BigInt, m: BigInt, minM: BigInt)
 
   def monitor(
       df: DataFrame,
@@ -54,77 +48,26 @@ object StreamingPageHinkley {
     require(df.isStreaming, "use ops.TimeSeries.pageHinkley for batch")
     require(lambdaMicro > 0, s"lambdaMicro $lambdaMicro must be > 0")
     require(deltaMicro >= 0, s"deltaMicro $deltaMicro must be >= 0")
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val valIdx = schema.fieldIndex(valueCol)
-
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
-    val outSchema = StructType(Seq(
-      schema(keyCol), schema(tieCol),
-      StructField("ts_ms", LongType, nullable = false),
+    val outSchema = KeyedFinalize.microSchema(df.schema, keyCol, tieCol,
       StructField("v_micro", LongType, nullable = false),
       StructField("ph_micro", DecimalType(38, 0), nullable = false),
-      StructField("alarmed", BooleanType, nullable = false)))
+      StructField("alarmed", BooleanType, nullable = false))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[PhState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[PhState]) =>
-
-        var st = state.getOption.getOrElse(
-          PhState(Nil, 0L, BigInt(0), BigInt(0), BigInt(0)))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(valIdx) && !r.isNullAt(tIdx)) {
-            val t = r.getLong(tIdx)
-            if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-              val vMicro = math.floor(
-                r.get(valIdx).asInstanceOf[Number].doubleValue() * 1e6).toLong
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                List(r.get(keyIdx), r.get(tieIdx), t, vMicro)) :: st.pending)
-            }
-          }
-        }
-
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = ready.sortBy(p => (p._1, p._2)).map { case (_, _, prefix) =>
-          val vMicro = prefix(3).asInstanceOf[Long]
-          val n = st.n + 1
-          val s = st.s + vMicro
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.MicroFold[PhAcc](df.schema, keyCol, tieCol, valueCol) {
+        def zero: PhAcc = PhAcc(0L, BigInt(0), BigInt(0), BigInt(0))
+        def step(a: PhAcc, t: Long, p: KeyedFinalize.Micro, out: ArrayBuffer[Row]): PhAcc = {
+          val n = a.n + 1
+          val s = a.s + p.v
           val mean = s / n // BigInt / truncates toward zero = batch `div`
-          val m = st.m + BigInt(vMicro) - mean - deltaMicro
-          val minM = st.minM.min(m)
-          st = st.copy(n = n, s = s, m = m, minM = minM)
+          val m = a.m + BigInt(p.v) - mean - deltaMicro
+          val minM = a.minM.min(m)
           val exc = m - minM
-          Row.fromSeq(prefix :+
-            new java.math.BigDecimal(exc.bigInteger) :+
-            (exc > BigInt(lambdaMicro)))
+          out += Row(p.key, p.tie, t, p.v, new java.math.BigDecimal(exc.bigInteger),
+            exc > BigInt(lambdaMicro))
+          PhAcc(n, s, m, minM)
         }
-
-        if (st.pending.isEmpty && st.n == 0L) {
-          state.remove()
-        } else {
-          state.update(st)
-          st.pending.map(_._1).minOption.foreach { nextT =>
-            state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-          }
-        }
-        out.iterator
-    }(Encoders.kryo[PhState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, tieCol, "ts_ms", "v_micro", "ph_micro", "alarmed")
+        def keep(a: PhAcc, watermark: Long): Boolean = a.n != 0L
+      })
   }
 }

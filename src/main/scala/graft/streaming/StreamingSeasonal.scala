@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming seasonal-baseline anomaly monitor — "is Tuesday 3am
@@ -33,10 +32,6 @@ import scala.concurrent.duration.Duration
   */
 object StreamingSeasonal {
 
-  final case class SeasonalState(
-      pending: List[(Long, String, List[Any])], // (tMs, tieKey, out prefix)
-      phases: Map[Int, (Long, BigInt, BigInt)]) // phase -> (n, S, Q)
-
   def monitor(
       df: DataFrame,
       keyCol: String,
@@ -51,58 +46,23 @@ object StreamingSeasonal {
     require(period >= 2 && period <= 10000, s"period $period out of [2, 10000]")
     require(bucketMs >= 1, s"bucketMs $bucketMs must be >= 1")
     require(zThresholdMilli > 0, s"zThresholdMilli $zThresholdMilli must be > 0")
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(keyCol)
-    val tieIdx = schema.fieldIndex(tieCol)
-    val valIdx = schema.fieldIndex(valueCol)
-
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
-    val outSchema = StructType(Seq(
-      schema(keyCol), schema(tieCol),
-      StructField("ts_ms", LongType, nullable = false),
+    val outSchema = KeyedFinalize.microSchema(df.schema, keyCol, tieCol,
       StructField("phase", IntegerType, nullable = false),
       StructField("v_micro", LongType, nullable = false),
       StructField("n_prior", LongType, nullable = false),
       StructField("z_milli", LongType, nullable = true),
-      StructField("anomalous", BooleanType, nullable = true)))
+      StructField("anomalous", BooleanType, nullable = true))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[SeasonalState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[SeasonalState]) =>
-
-        var st = state.getOption.getOrElse(SeasonalState(Nil, Map.empty))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(valIdx) && !r.isNullAt(tIdx)) {
-            val t = r.getLong(tIdx)
-            if (t > watermark || watermark == StreamingDedup.NoWatermarkYet) {
-              val vMicro = math.floor(
-                r.get(valIdx).asInstanceOf[Number].doubleValue() * 1e6).toLong
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                List(r.get(keyIdx), r.get(tieIdx), t, vMicro)) :: st.pending)
-            }
-          }
-        }
-
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-        val out = ready.sortBy(p => (p._1, p._2)).map { case (_, _, prefix) =>
-          val t = prefix(2).asInstanceOf[Long]
-          val vMicro = prefix(3).asInstanceOf[Long]
+    // the accumulator maps phase -> (n, S, Q)
+    type Phases = Map[Int, (Long, BigInt, BigInt)]
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.MicroFold[Phases](df.schema, keyCol, tieCol, valueCol) {
+        def zero: Phases = Map.empty
+        def step(phases: Phases, t: Long, p: KeyedFinalize.Micro,
+            out: ArrayBuffer[Row]): Phases = {
+          val vMicro = p.v
           val phase = ((t / bucketMs) % period).toInt
-          val (n, s, q) = st.phases.getOrElse(phase, (0L, BigInt(0), BigInt(0)))
+          val (n, s, q) = phases.getOrElse(phase, (0L, BigInt(0), BigInt(0)))
           // score against the PRE-UPDATE moments: strictly earlier data
           val z: Option[Long] =
             if (n < 2) None
@@ -114,25 +74,12 @@ object StreamingSeasonal {
                 math.sqrt((BigInt(n) * varN2).toDouble / (n - 1).toDouble))
                 .toLong)
             }
-          st = st.copy(phases = st.phases.updated(phase,
-            (n + 1, s + vMicro, q + BigInt(vMicro) * vMicro)))
-          Row.fromSeq(prefix.take(2) ++ Seq(t, phase, vMicro, n,
+          out += Row(p.key, p.tie, t, phase, vMicro, n,
             z.map(Long.box).orNull,
-            z.map(zz => Boolean.box(math.abs(zz) >= zThresholdMilli)).orNull))
+            z.map(zz => Boolean.box(math.abs(zz) >= zThresholdMilli)).orNull)
+          phases.updated(phase, (n + 1, s + vMicro, q + BigInt(vMicro) * vMicro))
         }
-
-        if (st.pending.isEmpty && st.phases.isEmpty) {
-          state.remove()
-        } else {
-          state.update(st)
-          st.pending.map(_._1).minOption.foreach { nextT =>
-            state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-          }
-        }
-        out.iterator
-    }(Encoders.kryo[SeasonalState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, tieCol, "ts_ms", "phase", "v_micro", "n_prior",
-      "z_milli", "anomalous")
+        def keep(phases: Phases, watermark: Long): Boolean = phases.nonEmpty
+      })
   }
 }

@@ -215,16 +215,8 @@ object StreamingSlidingWindows {
       .withColumn("__event_ts__", timestamp_millis(col(EventTime.Col)))
       .withWatermark("__event_ts__", s"$maxOutOfOrdernessMs milliseconds")
 
-    // Length-prefixed key encoding: ("ab","c") -> "S2:ab|S1:c" and
-    // ("a","bc") -> "S1:a|S2:bc" are distinct state keys (a plain
-    // separator-join collides when a key value contains the separator),
-    // and a null key part encodes as "N", distinct from the string "null".
-    val grouped = withTs.groupByKey { r: Row =>
-      keyIdx.map { i =>
-        if (r.isNullAt(i)) "N"
-        else { val s = String.valueOf(r.get(i)); s"S${s.length}:$s" }
-      }.mkString("|")
-    }(Encoders.STRING)
+    val grouped =
+      withTs.groupByKey((r: Row) => KeyedFinalize.encodeKey(r, keyIdx))(Encoders.STRING)
 
     val nFeats = feats.length
 

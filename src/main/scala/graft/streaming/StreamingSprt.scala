@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
+import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.duration.Duration
 
 /** Streaming Wald SPRT — the unbounded twin of
@@ -24,14 +23,14 @@ import scala.concurrent.duration.Duration
   * it stops — processing more data would inflate the design error
   * rates), and no second row is ever emitted. The tombstone must
   * persist — removing it would silently RESTART the test on the next
-  * event; it is one boolean plus the key, the smallest state this
-  * engine keeps.
+  * event; it is one boolean beside the walk's two scalars, the smallest
+  * state this engine keeps.
   *
   * Late rows (at or below the watermark) are dropped by Spark's exec
   * BEFORE this function runs (`eventTime <= watermark`, floor 0 — so a
   * t = 0 ms row never reaches any GroupState code and every arriving
   * row has t >= 1); pending rows finalize on the plain `t <= watermark`
-  * partition. See [[StreamingMsprt]]'s watermark-mechanics scaladoc for
+  * partition. See [[KeyedFinalize]]'s watermark-mechanics scaladoc for
   * why no epoch-0 special case exists or is needed.
   *
   * 100 TB shape: one shuffle on the key; per-key state is the lateness
@@ -39,17 +38,8 @@ import scala.concurrent.duration.Duration
   */
 object StreamingSprt {
 
-  /** Shared pre-watermark admission sentinel — see
-    * [[StreamingDedup.NoWatermarkYet]].
-    */
-  private val NoWatermarkYet = StreamingDedup.NoWatermarkYet
-
-  final case class SprtState(
-      pending: List[(Long, String, Boolean)], // (tMs, tieKey, outcome)
-      llr: Long,
-      step: Long,
-      decided: Boolean,
-      key: Any) // original-typed key, carried for timeout-driven emits
+  /** LLR walk; `decided` is the tombstone. */
+  private[streaming] final case class SprtAcc(llr: Long, step: Long, decided: Boolean)
 
   def sprtBernoulli(
       df: DataFrame,
@@ -72,11 +62,6 @@ object StreamingSprt {
     val tieIdx = schema.fieldIndex(tieCol)
     val outIdx = schema.fieldIndex(outcomeCol)
 
-    val withMs = df
-      .withWatermark(tsCol, s"${lateness.toMillis} milliseconds")
-      .withColumn("__ts_ms__", unix_millis(col(tsCol)))
-    val tIdx = schema.length
-
     val outSchema = StructType(Seq(
       schema(keyCol),
       StructField("ts_ms", LongType, nullable = false),
@@ -84,64 +69,25 @@ object StreamingSprt {
       StructField("llr_at_decision_micro", LongType, nullable = false),
       StructField("decision", StringType, nullable = false)))
 
-    val grouped = withMs.groupByKey { r: Row =>
-      if (r.isNullAt(keyIdx)) "N"
-      else { val s = String.valueOf(r.get(keyIdx)); s"S${s.length}:$s" }
-    }(Encoders.STRING)
-
-    val flat = grouped.flatMapGroupsWithState[SprtState, Row](
-      OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-      (_: String, rows: Iterator[Row], state: GroupState[SprtState]) =>
-
-        var st = state.getOption.getOrElse(
-          SprtState(Nil, 0L, 0L, decided = false, key = null))
-        val watermark = state.getCurrentWatermarkMs()
-
-        rows.foreach { r =>
-          if (!r.isNullAt(keyIdx) && !r.isNullAt(outIdx) && !r.isNullAt(tIdx)) {
-            if (st.key == null) st = st.copy(key = r.get(keyIdx))
-            val t = r.getLong(tIdx)
-            // decided keys discard on arrival — the test is over
-            if (!st.decided &&
-                (t > watermark || watermark == NoWatermarkYet)) {
-              st = st.copy(pending = (t,
-                StreamingDedup.orderKey(r.get(tieIdx)),
-                r.get(outIdx).asInstanceOf[Boolean]) :: st.pending)
-            }
-          }
+    // buffered rows keep (key, outcome)
+    KeyedFinalize(df, Seq(keyCol), tsCol, lateness.toMillis, outSchema,
+      new KeyedFinalize.Fold[SprtAcc, (Any, Boolean)] {
+        def zero: SprtAcc = SprtAcc(0L, 0L, decided = false)
+        def admit(r: Row, t: Long): Option[(String, (Any, Boolean))] =
+          if (r.isNullAt(keyIdx) || r.isNullAt(outIdx)) None
+          else Some(KeyedFinalize.orderKey(r.get(tieIdx)) ->
+            (r.get(keyIdx), r.getBoolean(outIdx)))
+        def step(a: SprtAcc, t: Long, p: (Any, Boolean), out: ArrayBuffer[Row]): SprtAcc = {
+          val llr = a.llr + (if (p._2) llrPosMicro else llrNegMicro)
+          val decided = llr >= upperMicro || llr <= lowerMicro
+          if (decided)
+            out += Row(p._1, t, a.step + 1, llr, if (llr >= upperMicro) "accept_h1" else "accept_h0")
+          SprtAcc(llr, a.step + 1, decided)
         }
-
-        // plain t <= watermark finalization — pending rows always have
-        // t >= 1 (Spark's exec drops eventTime <= watermark first), so
-        // no watermark-0 case exists (see [[StreamingMsprt]] scaladoc)
-        val (ready, stillPending) =
-          st.pending.partition(_._1 <= watermark)
-        st = st.copy(pending = stillPending)
-
-        val out = scala.collection.mutable.ListBuffer.empty[Row]
-        ready.sortBy(p => (p._1, p._2)).foreach { case (t, _, outcome) =>
-          if (!st.decided) {
-            val llr = st.llr + (if (outcome) llrPosMicro else llrNegMicro)
-            val step = st.step + 1
-            st = st.copy(llr = llr, step = step)
-            if (llr >= upperMicro || llr <= lowerMicro) {
-              val decision = if (llr >= upperMicro) "accept_h1" else "accept_h0"
-              out += Row(st.key, t, step, llr, decision)
-              st = st.copy(decided = true, pending = Nil)
-            }
-          }
-        }
-
         // the tombstone persists on purpose (see scaladoc); undecided
         // walks keep their scalars so the evidence survives idle gaps
-        state.update(st)
-        st.pending.map(_._1).minOption.foreach { nextT =>
-          state.setTimeoutTimestamp(math.max(nextT, watermark + 1))
-        }
-        out.iterator
-    }(Encoders.kryo[SprtState], Encoders.row(outSchema))
-
-    flat.toDF(keyCol, "ts_ms", "n_at_decision", "llr_at_decision_micro",
-      "decision")
+        def keep(a: SprtAcc, watermark: Long): Boolean = true
+        override def closed(a: SprtAcc): Boolean = a.decided
+      })
   }
 }

@@ -141,14 +141,8 @@ object StreamingTemporalJoin {
       .withColumn("__event_ts__", timestamp_millis(col(EventTime.Col)))
       .withWatermark("__event_ts__", s"$maxOutOfOrdernessMs milliseconds")
 
-    // Length-prefixed key encoding (see StreamingSlidingWindows): composite
-    // keys stay collision-free, NULL encodes distinctly from "null".
-    val grouped = withTs.groupByKey { r: Row =>
-      keyIdx.map { i =>
-        if (r.isNullAt(i)) "N"
-        else { val s = String.valueOf(r.get(i)); s"S${s.length}:$s" }
-      }.mkString("|")
-    }(Encoders.STRING)
+    val grouped =
+      withTs.groupByKey((r: Row) => KeyedFinalize.encodeKey(r, keyIdx))(Encoders.STRING)
 
     val flat = grouped.flatMapGroupsWithState[JoinState, Row](
       OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {

@@ -477,6 +477,71 @@ class StoreSpec extends SparkSuite {
       server.stop()
     }
   }
+
+  /** A fresh checkpoint directory for one streaming query. */
+  private def checkpoint(name: String): String =
+    s"${SparkSuite.tmpDir}/$name-${java.util.UUID.randomUUID()}"
+
+  test("materializeStream upserts each micro-batch into a MemoryStoreSink") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long)]
+    val src = DataFrameSource("ms_stream_src", stream.toDF().toDF("name", "cost", "t_ms"),
+      keys = Some(Seq("name")), timestampField = Some("t_ms"),
+      timestampFormat = "epoch_millis")
+    val q = new GraftClient(spark).materializeStream(
+      src, MemoryStoreSink("ms_stream_tbl"), checkpoint("ms_stream"))
+    def cost(name: String): Option[Any] =
+      MemoryOnlineStore.get("ms_stream_tbl", Map("name" -> name)).flatMap(_.get("cost"))
+    try {
+      stream.addData(("Alex", 100L, 10L), ("Emma", 400L, 20L))
+      q.processAllAvailable()
+      assert(cost("Alex").contains(100L) && cost("Emma").contains(400L))
+      // a newer row replaces the stored one; an older one does not
+      stream.addData(("Alex", 300L, 30L), ("Emma", 1L, 5L))
+      q.processAllAvailable()
+      assert(cost("Alex").contains(300L) && cost("Emma").contains(400L))
+      assert(cost("Nobody").isEmpty)
+    } finally q.stop()
+  }
+
+  test("materializeStream writes each micro-batch into a RedisSink over RESP") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val server = new MiniRespServer(requiredPassword = "pw")
+    server.start()
+    val old = RedisClients.provider
+    try {
+      RedisClients.provider = RespRedis.provider
+      val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Double, Long)]
+      val src = DataFrameSource("rs_stream_src",
+        stream.toDF().toDF("name", "cost", "score", "t_ms"),
+        keys = Some(Seq("name")), timestampField = Some("t_ms"),
+        timestampFormat = "epoch_millis")
+      val q = new GraftClient(spark).materializeStream(src,
+        RedisSink(host = "127.0.0.1", port = server.port, username = "u1",
+          password = "pw", dbNum = 1, namespace = "nss"),
+        checkpoint("rs_stream"))
+      try {
+        stream.addData(("Alex", 100L, 1.5, 10L))
+        q.processAllAvailable()
+        assert(server.get(1, "nss:Alex:cost").contains("100"))
+        assert(server.get(1, "nss:Alex:score").contains("1.5"))
+        stream.addData(("Alex", 300L, 2.5, 30L), ("Emma", 400L, 0.5, 20L))
+        q.processAllAvailable()
+        assert(server.get(1, "nss:Alex:cost").contains("300"))
+        assert(server.get(1, "nss:Emma:cost").contains("400"))
+        // keys and the timestamp field are not features
+        assert(server.get(1, "nss:Alex:t_ms").isEmpty && server.get(1, "nss:Alex:name").isEmpty)
+      } finally q.stop()
+    } finally {
+      RedisClients.provider = old
+      RespRedis.shutdown()
+      server.stop()
+    }
+  }
 }
 
 /** Minimal in-process RESP2 SERVER for protocol-level client tests: real

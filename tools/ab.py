@@ -3,20 +3,24 @@
 
     tools/ab.py PARENT WORKLOAD --pairs N --seconds S [--change REV] [--seed0 K]
 
-PARENT and --change (default HEAD) are git revs, each checked out as a
-detached `git worktree` in a scratch directory outside the repo, or paths
-to directories that already hold a checkout. Pair i runs
+PARENT and --change (default HEAD) are git revs, each exported with
+`git archive` into a scratch directory outside the repo, or paths to
+directories that already hold a checkout. Pair i runs
 `perfbench/run.py --workload WORKLOAD --seed K+i --seconds S` in both trees
 with the same seed, the parent first on even pairs and the change first on
 odd ones. It prints each pair's end-to-end metrics (the `end_to_end` list of
 BENCHMARK.json), then each side's median and quartiles and how many pairs
-the change won. Builds, logs and worktrees go to the scratch directory
-(`--work`, default a fresh temporary directory); nothing is written inside
-the checkout, and worktrees it made are removed at the end.
+the change won. Exported trees, their builds and the logs go to the
+scratch directory (`--work`, default a fresh temporary directory), where a
+tree already exported for the same commit is reused with its build; each
+run's stderr goes to `<side>-<seed>.log` and its stdout, with the detail
+figures, to `<side>-<seed>.out`. Nothing is written inside the checkout. Keep `--work` short: sbt's build
+socket lives inside each tree and must fit a unix socket path.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -26,15 +30,35 @@ ROOT = subprocess.run(["git", "rev-parse", "--show-toplevel"], capture_output=Tr
                       text=True, check=True, cwd=os.path.dirname(os.path.abspath(__file__))).stdout.strip()
 
 
-def checkout(ref, work, side, made):
-    """A directory holding `ref`: the path itself if it is one, else a new worktree."""
+def checkout(ref, work, side):
+    """A directory holding `ref`: the path itself if it is one, else the
+    commit's files exported to `work/side` (reused while it holds that
+    commit, so its build is reused too)."""
     if os.path.isdir(ref):
         return os.path.abspath(ref)
-    path = os.path.join(work, side)
-    subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", path, ref],
-                   check=True, stdout=subprocess.DEVNULL)
-    made.append(path)
+    sha = subprocess.run(["git", "-C", ROOT, "rev-parse", "--verify", ref + "^{commit}"],
+                         capture_output=True, text=True, check=True).stdout.strip()
+    path, stamp = os.path.join(work, side), os.path.join(work, side + ".rev")
+    if not (os.path.isdir(path) and os.path.exists(stamp) and open(stamp).read() == sha):
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        archive = subprocess.Popen(["git", "-C", ROOT, "archive", sha], stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", path], stdin=archive.stdout, check=True)
+        if archive.wait() != 0:
+            raise SystemExit(f"git archive {ref} failed")
+        with open(stamp, "w") as f:
+            f.write(sha)
     return path
+
+
+def check_path_length(tree):
+    """run.py's sbt build opens a unix socket under the tree, and sbt's
+    socket library refuses a path over 103 bytes, so a deep tree fails to
+    build."""
+    sock = os.path.join(tree, ".bench_build", "sbt-tmp", ".sbt", "sbt-socket" + "0" * 20,
+                        "sbt-load.sock")
+    if len(sock.encode()) > 103:
+        raise SystemExit(f"{tree} is too deep for sbt's build socket; use a shorter --work")
 
 
 def run(tree, workload, seed, seconds, log):
@@ -42,6 +66,8 @@ def run(tree, workload, seed, seconds, log):
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     with open(log, "w") as err:
         p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=err, text=True)
+    with open(os.path.splitext(log)[0] + ".out", "w") as out:  # the detail figures
+        out.write(p.stdout)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         raise SystemExit(f"{tree}: run.py exited {p.returncode}; see {log}")
@@ -69,42 +95,38 @@ def main():
     if os.path.commonpath([work, ROOT]) == ROOT:
         raise SystemExit(f"--work {work} is inside the checkout")
     os.makedirs(work, exist_ok=True)
-    made = []
-    try:
-        trees = {"parent": checkout(a.parent, work, "parent", made),
-                 "change": checkout(a.change, work, "change", made)}
-        with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
-            better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
-        names = list(better)
-        res = {"parent": [], "change": []}
-        print("pair seed first  " + "  ".join(f"{n:>19}" for n in names) + "  failed(p/c)")
-        for i in range(a.pairs):
-            seed = a.seed0 + i
-            order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-            failed = {}
-            for side in order:
-                m, failed[side] = run(trees[side], a.workload, seed, a.seconds,
-                                      os.path.join(work, f"{side}-{seed}.log"))
-                res[side].append(m)
-            cells = [f"{res['parent'][-1][n]:>9.4g}/{res['change'][-1][n]:<9.4g}" for n in names]
-            print(f"{i:>4} {seed:>4} {order[0]:<6} " + "  ".join(cells)
-                  + f"  {failed['parent']}/{failed['change']}", flush=True)
+    trees = {"parent": checkout(a.parent, work, "parent"),
+             "change": checkout(a.change, work, "change")}
+    for tree in trees.values():
+        check_path_length(tree)
+    with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
+        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+    names = list(better)
+    res = {"parent": [], "change": []}
+    print("pair seed first  " + "  ".join(f"{n:>19}" for n in names) + "  failed(p/c)")
+    for i in range(a.pairs):
+        seed = a.seed0 + i
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        failed = {}
+        for side in order:
+            m, failed[side] = run(trees[side], a.workload, seed, a.seconds,
+                                  os.path.join(work, f"{side}-{seed}.log"))
+            res[side].append(m)
+        cells = [f"{res['parent'][-1][n]:>9.4g}/{res['change'][-1][n]:<9.4g}" for n in names]
+        print(f"{i:>4} {seed:>4} {order[0]:<6} " + "  ".join(cells)
+              + f"  {failed['parent']}/{failed['change']}", flush=True)
 
-        print(f"\n{a.workload}: {a.pairs} pairs, parent vs change (q1 / median / q3)")
-        for n in names:
-            p = [r[n] for r in res["parent"]]
-            c = [r[n] for r in res["change"]]
-            sign = -1 if better[n] == "lower" else 1
-            wins = sum(sign * (y - x) > 0 for x, y in zip(p, c))
-            pq, cq = quartiles(p), quartiles(c)
-            delta = (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
-            print(f"  {n:<8} parent {pq[0]:.4g} / {pq[1]:.4g} / {pq[2]:.4g}"
-                  f"   change {cq[0]:.4g} / {cq[1]:.4g} / {cq[2]:.4g}"
-                  f"   median {delta:+.1%}   change wins {wins}/{a.pairs}")
-    finally:
-        for path in made:
-            subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", path],
-                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    print(f"\n{a.workload}: {a.pairs} pairs, parent vs change (q1 / median / q3)")
+    for n in names:
+        p = [r[n] for r in res["parent"]]
+        c = [r[n] for r in res["change"]]
+        sign = -1 if better[n] == "lower" else 1
+        wins = sum(sign * (y - x) > 0 for x, y in zip(p, c))
+        pq, cq = quartiles(p), quartiles(c)
+        delta = (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
+        print(f"  {n:<8} parent {pq[0]:.4g} / {pq[1]:.4g} / {pq[2]:.4g}"
+              f"   change {cq[0]:.4g} / {cq[1]:.4g} / {cq[2]:.4g}"
+              f"   median {delta:+.1%}   change wins {wins}/{a.pairs}")
     print(f"logs in {work}")
 
 
