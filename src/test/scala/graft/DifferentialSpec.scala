@@ -172,6 +172,68 @@ class DifferentialSpec extends SparkSuite {
     }
   }
 
+  test("MIN/MAX: streaming equals batch past 2^53 and on TIMESTAMP values") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // 2^53 + 1 rounds to the double of 2^53 and 2^53 + 3 to that of
+    // 2^53 + 4, and a TIMESTAMP is no Number: in each window the extreme
+    // value arrives after one it only ties as a double (or not at all)
+    val big = 9007199254740992L
+    def ts(h: Int) = new java.sql.Timestamp(h * 3600000L)
+    val rows = Seq(
+      ("a", big + 1, ts(12), 1 * minute), ("a", big, ts(8), 2 * minute),
+      ("a", big + 3, ts(10), 3 * minute), ("a", big + 4, ts(18), 4 * minute),
+      ("a", big + 2, ts(9), 5 * minute), ("b", big + 3, ts(5), 1 * minute),
+      ("b", big + 4, ts(7), 2 * minute), ("b", big + 1, ts(6), 3 * minute),
+      ("b", big, ts(4), 4 * minute))
+    def src(df: org.apache.spark.sql.DataFrame, name: String) = DataFrameSource(
+      name, df.toDF("k", "b", "ts_v", "t_ms"), keys = Some(Seq("k")),
+      timestampField = Some("t_ms"), timestampFormat = "epoch_millis")
+    val aggs = for (e <- Seq("b", "ts_v"); a <- Seq(AggFunc.Min, AggFunc.Max))
+      yield (s"${a.name.toLowerCase}_$e", e, a)
+    def over(s: TableDescriptor, name: String) = DerivedFeatureView(name, s,
+      features = aggs.flatMap { case (n, e, a) => Seq(
+        Feature(s"u_$n", OverWindowTransform(e, a, None, Seq("k"))),
+        Feature(s"w_$n", OverWindowTransform(e, a, Some(2.minutes), Seq("k"))),
+        Feature(s"l_$n", OverWindowTransform(e, a, None, Seq("k"), limit = Some(3)))) },
+      keepSourceFields = true)
+    def sliding(s: TableDescriptor, name: String) = SlidingFeatureView(name, s,
+      features = aggs.flatMap { case (n, e, a) => Seq(
+        Feature(s"s_$n", SlidingWindowTransform(e, a, 3.minutes, 1.minute, Seq("k"))),
+        Feature(s"sl_$n", SlidingWindowTransform(e, a, 3.minutes, 1.minute, Seq("k"),
+          limit = Some(2)))) })
+    val wrong = Seq[(String, (TableDescriptor, String) => TableDescriptor, String, Seq[String])](
+      ("over", over, "t_ms", Seq("u", "w", "l")),
+      ("sliding", sliding, "window_time", Seq("s", "sl"))).flatMap {
+      case (kind, view, tCol, prefixes) =>
+        val cols = Seq("k", tCol) ++ prefixes.flatMap(p => aggs.map(a => s"${p}_${a._1}"))
+        val expected = cl.getFeatures(view(src(rows.toDF(), s"dmb_$kind"), s"dmbv_$kind"))
+          .selectExpr(cols: _*).orderBy("k", tCol).collect().map(_.toSeq.toList).toSeq
+        val stream = MemoryStream[(String, Long, java.sql.Timestamp, Long)]
+        val query = cl.getFeatures(view(src(stream.toDF(), s"dms_$kind"), s"dmsv_$kind"))
+          .selectExpr(cols: _*).writeStream.format("memory").queryName(s"dm_out_$kind")
+          .outputMode("append").start()
+        try {
+          rows.sortBy(_._4).grouped(2).foreach { chunk =>
+            stream.addData(chunk: _*)
+            query.processAllAvailable()
+          }
+          stream.addData(("zz", 0L, ts(0), 10000L * minute))
+          query.processAllAvailable()
+          val got = spark.sql(
+              s"SELECT * FROM dm_out_$kind WHERE k <> 'zz' ORDER BY k, $tCol")
+            .collect().map(_.toSeq.toList).toSeq
+          assert(got.nonEmpty, kind)
+          // skipSameWindowOutput makes the emitted sliding rows depend on values
+          if (got.map(_.take(2)) != expected.map(_.take(2))) Seq(s"$kind rows")
+          else cols.indices.drop(2).filter(j => got.map(_(j)) != expected.map(_(j)))
+            .map(j => s"$kind ${cols(j)}")
+        } finally query.stop()
+    }
+    assert(wrong.isEmpty, s"streaming differs from batch in ${wrong.mkString(", ")}")
+  }
+
   test("k-means matches a naive in-memory model on randomized inputs") {
     val spark2 = spark
     import spark2.implicits._
@@ -271,30 +333,42 @@ class DifferentialSpec extends SparkSuite {
         keys = Some(Seq("k")), timestampField = Some("t_ms"),
         timestampFormat = "epoch_millis")
       graft.engine.Registry.register(streamRight)
-      val query = cl.getFeatures(view(streamLeft, s"djs_r$seed", s"djsv_$seed"))
-        .writeStream.format("memory").queryName(s"dj_out_$seed")
-        .outputMode("append").start()
-      try {
-        // chunk BOTH sides on shared strict time boundaries so no row ever
-        // arrives at-or-below the union watermark (which would drop it)
-        val allTimes = (left.map(_._2) ++ right.map(_._3)).distinct
-        val nChunks = rnd.nextInt(3) + 2
-        val cuts = rnd.shuffle(allTimes.toList).take(nChunks - 1).sorted
-        val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
-        bounds.foreach { case (lo, hi) =>
-          val rc = right.filter(r => r._3 > lo && r._3 <= hi)
-          val lc = left.filter(l => l._2 > lo && l._2 <= hi)
-          if (rc.nonEmpty) rightStream.addData(rc: _*)
-          if (lc.nonEmpty) leftStream.addData(lc: _*)
-          query.processAllAvailable()
-        }
-        leftStream.addData(("zz", 10000L * minute)) // drain
-        query.processAllAvailable()
-        val got = spark.sql(
-            s"SELECT k, t_ms, jv FROM dj_out_$seed WHERE k <> 'zz' ORDER BY k, t_ms")
-          .collect().map(_.toSeq.toList).toSeq
-        assert(got == expected, s"seed=$seed")
-      } finally query.stop()
+      val out = cl.getFeatures(view(streamLeft, s"djs_r$seed", s"djsv_$seed"))
+        .selectExpr("k", "t_ms", "jv")
+      val ckpt = s"${SparkSuite.tmpDir}/dj_ckpt_${seed}_${System.nanoTime()}"
+      // by batch id: a batch replayed after a restart replaces its first run
+      val batches = scala.collection.mutable.Map.empty[Long, Seq[List[Any]]]
+      // Both sides of a chunk are added while the query is stopped, then it
+      // runs on the same checkpoint until drained: with the query running, a
+      // batch could start between the two addData calls, advance the union
+      // watermark past the chunk's left rows and drop them as late.
+      def drain(): Unit = {
+        val q = out.writeStream.option("checkpointLocation", ckpt).outputMode("append")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            val rows = b.collect().map(_.toSeq.toList).toSeq
+            batches.synchronized { batches(id) = rows }
+          }.start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      // chunk BOTH sides on shared strict time boundaries so no row ever
+      // arrives at-or-below the union watermark (which would drop it)
+      val allTimes = (left.map(_._2) ++ right.map(_._3)).distinct
+      val nChunks = rnd.nextInt(3) + 2
+      val cuts = rnd.shuffle(allTimes.toList).take(nChunks - 1).sorted
+      val bounds = (Long.MinValue +: cuts).zip(cuts :+ Long.MaxValue)
+      bounds.foreach { case (lo, hi) =>
+        val rc = right.filter(r => r._3 > lo && r._3 <= hi)
+        val lc = left.filter(l => l._2 > lo && l._2 <= hi)
+        if (rc.nonEmpty) rightStream.addData(rc: _*)
+        if (lc.nonEmpty) leftStream.addData(lc: _*)
+        drain()
+      }
+      leftStream.addData(("zz", 10000L * minute)) // drain
+      drain()
+      val got = batches.synchronized(batches.values.flatten.toSeq)
+        .filter(_.head != "zz")
+        .sortBy(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Long]))
+      assert(got == expected, s"seed=$seed")
     }
   }
 

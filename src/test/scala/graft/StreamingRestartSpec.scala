@@ -11,14 +11,15 @@ import scala.collection.mutable
 import scala.concurrent.duration._
 import scala.util.Random
 
-/** Restart equivalence for the watermark-finalized keyed twins: a query
-  * stopped after k of n micro-batches and started again on the same
-  * source and checkpoint must emit, in total, exactly the rows of an
-  * uninterrupted run — the exactly-once contract of Structured
-  * Streaming. Every fixture is one of the twin's parity fixtures, fed in
-  * event-time order so no row is late, with the cut placed where the
-  * key state already holds finalized history: a twin that kept any of it
-  * outside its checkpointed state would diverge after the restart.
+/** Restart equivalence for the watermark-finalized keyed twins and the
+  * sliding-window operator: a query stopped after k of n micro-batches and
+  * started again on the same source and checkpoint must emit, in total,
+  * exactly the rows of an uninterrupted run — the exactly-once contract of
+  * Structured Streaming. Every fixture is fed in event-time order so no
+  * row is late (the twins' are their parity fixtures), with the cut placed
+  * where the key state already holds finalized history: an operator that
+  * kept any of it outside its checkpointed state would diverge after the
+  * restart.
   */
 class StreamingRestartSpec extends SparkSuite {
   import spark.implicits._
@@ -200,6 +201,30 @@ class StreamingRestartSpec extends SparkSuite {
               "value", AggFunc.Sum, None, Seq("uid"),
               filterExpr = Some("etype = 'pay'"), limit = Some(2)))),
           keepSourceFields = true))
+      }
+    }),
+    "sliding windows" -> (() => {
+      // u2's lone row makes two equal windows in a row (skipped) before its
+      // window empties (one defaults row); the cut leaves buckets of both
+      // keys and owed windows in the checkpointed state
+      val rows = Seq(
+        ("u1", 100L, 1 * h + 1), ("u2", 10L, 1 * h + 5), ("u1", 50L, 2 * h + 1),
+        ("u1", 50L, 3 * h + 2), ("u1", 70L, 3 * h + 9), ("u2", 20L, 5 * h),
+        ("u1", 200L, 6 * h + 3), ("u2", 20L, 6 * h + 4), ("u1", 30L, 7 * h))
+      check(Seq(rows.take(3), rows.slice(3, 6), rows.drop(6),
+        Seq(("zz", 0L, 100 * h))), stopAfter = 2) { df =>
+        val n = ids.incrementAndGet()
+        val src = DataFrameSource(s"rs_sw_src$n", df.toDF("uid", "value", "t_ms"),
+          keys = Some(Seq("uid")), timestampField = Some("t_ms"),
+          timestampFormat = "epoch_millis")
+        new GraftClient(spark).getFeatures(SlidingFeatureView(
+          s"rs_sw_view$n", src,
+          features = Seq(
+            Feature("sum_3h", SlidingWindowTransform("value", AggFunc.Sum, 3.hours, 1.hour, Seq("uid"))),
+            Feature("last_2", SlidingWindowTransform(
+              "value", AggFunc.LastValue, 3.hours, 1.hour, Seq("uid"), limit = Some(2))),
+            Feature("vc_2h", SlidingWindowTransform("value", AggFunc.ValueCounts, 2.hours, 1.hour, Seq("uid")))),
+          enableEmptyWindowOutput = true, skipSameWindowOutput = true))
       }
     }))
 

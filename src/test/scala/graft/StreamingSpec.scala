@@ -70,6 +70,21 @@ class StreamingSpec extends SparkSuite {
     } finally query.stop()
   }
 
+  test("streaming sliding rejects ROW_NUMBER when the view is built") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[(String, Long, Long)]
+    val src = DataFrameSource(
+      "s_rn_src", stream.toDF().toDF("name", "cost", "t_ms"),
+      keys = Some(Seq("name")), timestampField = Some("t_ms"),
+      timestampFormat = "epoch_millis")
+    val view = SlidingFeatureView("s_rn", src, features = Seq(
+      Feature("rn", SlidingWindowTransform("cost", AggFunc.RowNumber, 2.days, 1.day, Seq("name")))))
+    val e = intercept[IllegalArgumentException](new GraftClient(spark).getFeatures(view))
+    assert(e.getMessage.contains("ROW_NUMBER"))
+  }
+
   test("streaming late data: merged within lateness, dropped past watermark - maxWindow") {
     val spark2 = spark
     import spark2.implicits._
