@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** The profiler: runs selected inventory queries under the bench's
@@ -9,8 +10,12 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * "orchestration-bound" (optimize job/stage/pass counts). Usage:
   *   SPARK_GRAFT_SF_DIR=... tools/run.sh graft.JobProf [--repeat N] q158_fuzzy_pairs ...
   * Query arguments are name prefixes (none = every query); `--repeat N`
-  * (default 1) runs each selected query N times, one row per run, for
-  * steady-state timings. `SPARK_GRAFT_PROF_JOBS=1` adds per-job walls.
+  * (default 1) runs the selected queries N times over, one pass after
+  * another and one row per run, for steady-state timings. `compiles` is the
+  * number of classes Spark's code generator compiled during the run: Spark's
+  * codegen cache holds 100 classes, so a selection that needs more
+  * recompiles some on every pass. `SPARK_GRAFT_PROF_JOBS=1` adds per-job
+  * walls.
   */
 object JobProf {
   def main(args: Array[String]): Unit = {
@@ -53,17 +58,18 @@ object JobProf {
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.exists(n.startsWith) }
-    println(f"${"query"}%-28s ${"run"}%3s ${"wall_s"}%7s ${"task_s"}%7s ${"gc_s"}%5s ${"ser_s"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s")
-    for ((name, fn) <- sel; run <- 1 to repeat) {
+    println(f"${"query"}%-28s ${"run"}%3s ${"wall_s"}%7s ${"task_s"}%7s ${"gc_s"}%5s ${"ser_s"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"compiles"}%8s")
+    for (run <- 1 to repeat; (name, fn) <- sel) {
       spark.catalog.clearCache()
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0); serMs.set(0)
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable => System.err.println(s"$name FAILED: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
       // listener events drain asynchronously; give them a beat
       Thread.sleep(300)
-      println(f"$name%-28s $run%3d $wall%7.2f ${taskMs.get / 1e3}%7.2f ${gcMs.get / 1e3}%5.1f ${serMs.get / 1e3}%5.1f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d")
+      println(f"$name%-28s $run%3d $wall%7.2f ${taskMs.get / 1e3}%7.2f ${gcMs.get / 1e3}%5.1f ${serMs.get / 1e3}%5.1f ${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0}%8d")
     }
     spark.stop()
   }

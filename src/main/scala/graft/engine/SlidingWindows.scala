@@ -21,19 +21,23 @@ import org.apache.spark.sql.functions._
   *  - `skip_same_window_output`: suppress steps whose aggregated values are
   *    unchanged from the previously emitted row (sliding_feature_view.py:44-49).
   *
-  * Physical plan mirrors the reference's two-phase design
+  * Physical plan follows the reference's two-phase design
   * (java/feathub-udf/.../SlidingWindowUtils.java:66-170: tumbling pre-agg
-  * into step buckets, then a shared multi-size merge) re-expressed
-  * relationally: groupBy(keys, bucket) partial aggregation (map-side combine
-  * for free), then one RANGE window per window size over the bucket index —
-  * all window sizes share the single shuffle+sort on the keys, the analogue
-  * of the reference's shared state buffer. The per-key step grid (a
-  * `sequence` + `explode`, no cross join) supplies the empty-window rows the
-  * reference produces with Flink timers.
+  * into step panes, then a shared multi-size merge; the panes technique of
+  * Li et al., "No Pane, No Gain", SIGMOD Record 2005) re-expressed
+  * relationally: groupBy(keys, pane) partial aggregation (map-side combine
+  * for free), then one merge aggregate. Each pane b is exploded to the
+  * window ends b..b+maxSpan with its age e−b, and groupBy(keys, end) merges,
+  * per feature, only the panes younger than that feature's span — every
+  * window size shares the one aggregate, the analogue of the reference's
+  * shared state buffer. A pane whose age equals a feature's span marks the
+  * step where that window became empty, the row the reference emits from a
+  * Flink timer.
   *
-  * Scale: one shuffle for the pre-agg, one for the merge window; both keyed
-  * by the group keys. Buckets bound intermediate size at
-  * rows_per_key × (span/step), independent of window size count.
+  * Scale: one shuffle for the pre-agg and one keys repartition of the
+  * panes, which the merge aggregate and the skip-same `lag` both reuse.
+  * Intermediate size is pane rows × (maxSpan+1), independent of window-size
+  * count; list features copy each pane's list once per window end.
   */
 object SlidingWindows {
 
@@ -72,150 +76,115 @@ object SlidingWindows {
 
     if (step == 0) return perRecord(input, feats, keys, skipSameWindowOutput, postExprs)
 
-    // ---- Phase 1: per-feature value columns + step bucket -------------
+    // ---- Phase 1: per-feature value columns + step pane index --------
     val offset = zoneOffsetMs(
       input.sparkSession.conf.get("spark.sql.session.timeZone", "UTC"), step)
-    val withVals = feats.zipWithIndex.foldLeft(
-      input.withColumn(B, floor((col(t) - offset) / step))
-    ) { case (df, (f, i)) =>
+    val vals = feats.zipWithIndex.map { case (f, i) =>
       val e = SparkCompiler.compile(f.tr.expr)
-      val v = f.tr.filterExpr match {
-        case Some(fe) => when(SparkCompiler.compile(fe), e)
-        case None     => e
-      }
-      df.withColumn(s"__v_$i", v)
+      f.tr.filterExpr.fold(e)(fe => when(SparkCompiler.compile(fe), e)).as(s"__v_$i")
     }
+    val withVals = input.select(col("*") +: floor((col(t) - offset) / step).as(B) +: vals: _*)
 
     def needsList(f: SlidingFeature): Boolean =
       f.tr.limit.isDefined ||
         f.tr.aggFunc == AggFunc.CollectList || f.tr.aggFunc == AggFunc.ValueCounts
 
-    // ---- Phase 2: tumbling pre-aggregation into step buckets ----------
-    val partials: Seq[Column] = feats.zipWithIndex.flatMap { case (f, i) =>
+    // ---- Phase 2: tumbling pre-aggregation into step panes ------------
+    // Per feature: its pane partial besides the count, and how the merge
+    // combines that partial across panes. List partials stay unsorted; the
+    // merged list is sorted once.
+    val partials: Seq[Option[(Column, Column => Column)]] = feats.zipWithIndex.map { case (f, i) =>
       val v = col(s"__v_$i")
-      val cnt = count(v).as(s"__cnt_$i")
-      if (needsList(f))
-        Seq(sort_array(collect_list(when(v.isNotNull, struct(col(t).as("t"), v.as("v")))))
-          .as(s"__list_$i"), cnt)
+      val tv = when(v.isNotNull, struct(col(t).as("t"), v.as("v")))
+      if (needsList(f)) Some((collect_list(tv), c => flatten(collect_list(c))))
       else f.tr.aggFunc match {
-        case AggFunc.Sum   => Seq(sum(v).as(s"__sum_$i"), cnt)
-        case AggFunc.Count => Seq(cnt)
-        case AggFunc.Min   => Seq(min(v).as(s"__min_$i"), cnt)
-        case AggFunc.Max   => Seq(max(v).as(s"__max_$i"), cnt)
-        case AggFunc.Avg   => Seq(sum(v).as(s"__sum_$i"), cnt)
-        case AggFunc.FirstValue =>
-          Seq(min(when(v.isNotNull, struct(col(t).as("t"), v.as("v")))).as(s"__first_$i"), cnt)
-        case AggFunc.LastValue =>
-          Seq(max(when(v.isNotNull, struct(col(t).as("t"), v.as("v")))).as(s"__last_$i"), cnt)
-        case other =>
-          throw new IllegalArgumentException(s"Unsupported sliding agg $other")
+        case AggFunc.Sum | AggFunc.Avg => Some((sum(v), sum(_: Column)))
+        case AggFunc.Count             => None
+        case AggFunc.Min               => Some((min(v), min(_: Column)))
+        case AggFunc.Max               => Some((max(v), max(_: Column)))
+        case AggFunc.FirstValue        => Some((min(tv), min(_: Column)))
+        case AggFunc.LastValue         => Some((max(tv), max(_: Column)))
+        case other => throw new IllegalArgumentException(s"Unsupported sliding agg $other")
       }
     }
-    val groupCols = (keys :+ B).map(col)
-    val preAgg0 = withVals.groupBy(groupCols: _*).agg(partials.head, partials.tail: _*)
-    // One keys-only repartition of the (small) per-bucket partials lets the
-    // grid distinct, the grid⋈partials join, and every per-size merge
-    // window all reuse the same clustering (hash on a SUBSET of their keys
-    // satisfies their required distributions), collapsing what was four
-    // hash exchanges into two: the map-side-combined pre-agg shuffle and
-    // this one. Keyless views are single-partition by reference semantics.
-    // The persist matters at scale: the grid branch consumes preAgg a
-    // second time, and without it Spark replans that branch all the way
-    // down to a second source scan.
-    // AQE inside cached plans (default since Spark 3.5) hides the cache's
-    // output partitioning from consumers, which would re-shuffle both cache
-    // reads; pinning it off keeps the keys-clustering visible downstream.
-    input.sparkSession.conf
-      .set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
-    val preAgg = {
-      val p = if (keys.nonEmpty) preAgg0.repartition(keys.map(col): _*) else preAgg0
-      p.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val paneAggs = feats.indices.flatMap { i =>
+      count(col(s"__v_$i")).as(s"__cnt_$i") +: partials(i).map(_._1.as(s"__p_$i")).toSeq
     }
+    val panes0 = withVals.groupBy((keys :+ B).map(col): _*).agg(paneAggs.head, paneAggs.tail: _*)
+    // Hash on the keys alone also clusters the merge aggregate's (keys, end)
+    // and the skip-same lag's keys, so neither shuffles again. Keyless views
+    // are single-partition by reference semantics.
+    val panes = if (keys.nonEmpty) panes0.repartition(keys.map(col): _*) else panes0
 
-    // ---- Phase 3: per-key step grid (supplies empty-window steps) -----
-    // Generate grid buckets only NEAR DATA: each pre-agg bucket b feeds the
-    // windows ending at b..b+span-1 plus the became-empty step b+span, so
-    // exploding b..b+span per data bucket (then distinct) covers exactly the
-    // steps the reference's Flink timers would fire. Densifying the full
-    // min..max range per key (the naive formulation) explodes row counts for
-    // sparse keys with long histories and overflows sequence()'s max array
-    // length — this stays proportional to the data instead.
-    val maxSpanBuckets = feats.map(f => f.tr.windowSize.toMillis / step).max
+    // ---- Phase 3: one merge aggregate over every window end -----------
+    // Pane b feeds the windows ending at b..b+span-1; with empty-window
+    // output it also marks b+span, the step where that window became empty.
+    val spans = feats.map(_.tr.windowSize.toMillis / step)
+    val maxSpan = spans.max
     require(
-      maxSpanBuckets < 10_000_000,
-      s"window_size/step_size ratio $maxSpanBuckets too large; every input " +
+      maxSpan < 10_000_000,
+      s"window_size/step_size ratio $maxSpan too large; every input " +
         "row would feed that many output windows")
-    val grid = preAgg
-      .select(keys.map(col) :+
-        explode(sequence(col(B), col(B) + lit(maxSpanBuckets))).as(B): _*)
-      .distinct()
-    val joined = grid.join(preAgg, keys :+ B, "left")
+    // window ends b..b+lastAge per pane; a pane without event time has none
+    val end = "__end"
+    val lastAge = if (enableEmptyWindowOutput) maxSpan else maxSpan - 1
+    val aged = panes.select(col("*"), explode(sequence(col(B), col(B) + lastAge)).as(end))
+    val age = col(end) - col(B)
+    val merges = spans.zipWithIndex.flatMap { case (span, i) =>
+      def inWindow(c: String) = when(age < span, col(c))
+      coalesce(sum(inWindow(s"__cnt_$i")), lit(0L)).as(s"__wcnt_$i") +:
+        partials(i).map { case (_, merge) => merge(inWindow(s"__p_$i")).as(s"__p_$i") }.toSeq
+    }
+    val emptied =
+      if (!enableEmptyWindowOutput) Nil
+      else Seq(max(spans.zipWithIndex.map { case (span, i) =>
+        age.between(1L, span) && col(s"__cnt_$i") > 0 }.reduce(_ || _)).as("__emptied"))
+    val merged = aged
+      .groupBy(keys.map(col) :+ col(end).as(B): _*)
+      .agg(merges.head, merges.tail ++ emptied: _*)
 
-    // ---- Phase 4: one RANGE window per window size over bucket index --
-    val keyWin =
-      if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*) else Window.partitionBy()
-    val merged = feats.zipWithIndex.foldLeft(joined) { case (df, (f, i)) =>
-      val span = f.tr.windowSize.toMillis / step // buckets per window
-      val w = keyWin.orderBy(col(B)).rangeBetween(1L - span, Window.currentRow)
-      val cnt = coalesce(sum(col(s"__cnt_$i")).over(w), lit(0L))
+    // ---- Phase 4: feature values and emission rules -------------------
+    val featCols = feats.zipWithIndex.map { case (f, i) =>
+      val cnt = col(s"__wcnt_$i")
+      val r = col(s"__p_$i")
       val raw: Column = f.tr.aggFunc match {
         case _ if needsList(f) =>
-          val flat = flatten(collect_list(col(s"__list_$i")).over(w))
+          val flat = sort_array(r)
           val lim = f.tr.limit match {
             case Some(l) => slice(flat, greatest(size(flat) - l + 1, lit(1)), lit(l))
             case None    => flat
           }
           OverWindows.hofAgg(f.tr.aggFunc, lim)
-        case AggFunc.Sum   => sum(col(s"__sum_$i")).over(w)
         case AggFunc.Count => cnt
-        case AggFunc.Min   => min(col(s"__min_$i")).over(w)
-        case AggFunc.Max   => max(col(s"__max_$i")).over(w)
-        case AggFunc.Avg =>
-          when(cnt > 0, sum(col(s"__sum_$i")).over(w).cast("double") / cnt)
-        case AggFunc.FirstValue => first(col(s"__first_$i"), ignoreNulls = true).over(w)("v")
-        case AggFunc.LastValue  => last(col(s"__last_$i"), ignoreNulls = true).over(w)("v")
-        case other => throw new IllegalArgumentException(s"Unsupported sliding agg $other")
+        case AggFunc.Avg   => r.cast("double") / cnt
+        case AggFunc.FirstValue | AggFunc.LastValue => r("v")
+        case _ => r
       }
       // Empty-window defaults: SUM/COUNT → 0, others NULL
       // (ref: flink table_builder/aggregation_utils.py:93-118). A COUNT
       // with a limit counts the limited list, not the whole window.
       val value = f.tr.aggFunc match {
         case AggFunc.Sum   => when(cnt > 0, raw).otherwise(lit(0).cast(valueType(withVals, i)))
-        case AggFunc.Count => if (f.tr.limit.isEmpty) cnt else raw
+        case AggFunc.Count => raw
         case _             => when(cnt > 0, raw)
       }
-      df.withColumn(f.name, value).withColumn(s"__wcnt_$i", cnt)
+      value.as(f.name)
     }
-
-    // ---- Phase 5: emission rules --------------------------------------
+    // a step is kept if some window holds data, or (with empty-window
+    // output) if it is the step where a window became empty
     val anyData = feats.indices.map(i => col(s"__wcnt_$i") > 0).reduce(_ || _)
-    val orderW = keyWin.orderBy(col(B))
-    val withAny = merged.withColumn("__any", anyData)
-    val kept =
-      if (enableEmptyWindowOutput)
-        // keep data rows plus the single step where the window became empty;
-        // the lag must be materialized via withColumn first — window
-        // functions are not allowed directly inside filter().
-        withAny
-          .withColumn("__keep",
-            col("__any") || lag(col("__any"), 1, false).over(orderW))
-          .filter(col("__keep"))
-          .drop("__keep")
-      else withAny.filter(col("__any"))
+    val kept = merged.filter(if (enableEmptyWindowOutput) anyData || col("__emptied") else anyData)
 
     val windowTime = ((col(B) + 1) * step + offset - 1).as(SparkCompiler.WindowTimeCol)
-    val featCols = feats.map(f => col(f.name))
-    val withTime = kept.withColumn(SparkCompiler.WindowTimeCol, windowTime)
-    val withPost = postExprs.foldLeft(withTime) { case (df, (n, e)) =>
+    val withTime = kept.select(keys.map(col) ++ (windowTime +: featCols) :+ col(B): _*)
+    val out = postExprs.foldLeft(withTime) { case (df, (n, e)) =>
       df.withColumn(n, SparkCompiler.compile(e))
     }
 
-    val outCols = keys.map(col) ++ Seq(col(SparkCompiler.WindowTimeCol)) ++
-      featCols ++ postExprs.map { case (n, _) => col(n) }
-    val out = withPost.select(outCols :+ col(B): _*)
-
     val result =
       if (skipSameWindowOutput) {
+        val keyWin =
+          if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*) else Window.partitionBy()
         out
           .withColumn("__sig", comparableSig(out, feats.map(_.name)))
           .withColumn("__prev", lag(col("__sig"), 1).over(keyWin.orderBy(col(B))))

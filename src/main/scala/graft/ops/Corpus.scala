@@ -714,16 +714,6 @@ object Corpus {
       .withColumn("keep", col("drop_reason").isNull)
   }
 
-  /** Per-filter first-fail drop counts over a [[filterCascade]] result —
-    * the one-line-per-filter curation report. Kept rows count under
-    * reason `__kept__`. A single map-side-combined aggregation to
-    * |filters|+1 rows.
-    */
-  def cascadeStats(cascaded: DataFrame): DataFrame =
-    cascaded
-      .groupBy(coalesce(col("drop_reason"), lit("__kept__")).as("reason"))
-      .agg(count(lit(1)).as("n_docs"))
-
   /** Z-order (Morton) value over `cols`: each column is clamped to
     * `[0, 2^bits)` and their low `bits` bits are round-robin interleaved
     * (column 0 owns bit positions `0, n, 2n, …`). Rows close in z-value

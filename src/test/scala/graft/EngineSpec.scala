@@ -556,6 +556,21 @@ class EngineSpec extends SparkSuite {
       (1 to 5).map(d => t0 + d * day - 1))
   }
 
+  test("sliding window: building and running the view leaves the session as it was") {
+    // the batch sliding view must not write session confs or leave
+    // persisted intermediates behind in the caller's session
+    spark.catalog.clearCache()
+    val confBefore = spark.conf.getAll
+    val view = SlidingFeatureView(
+      "v_slide_no_side_effects", purchaseSource,
+      features = Seq(
+        Feature("total_cost", SlidingWindowTransform("cost", AggFunc.Sum, 2.days, 1.day)),
+        Feature("n", SlidingWindowTransform("cost", AggFunc.Count, 3.days, 1.day))))
+    assert(client.getFeatures(view).collect().nonEmpty)
+    assert(spark.conf.getAll == confBefore)
+    assert(spark.sharedState.cacheManager.isEmpty, "a sliding intermediate was left cached")
+  }
+
   test("sliding window: session timezone aligns day-window boundaries") {
     // Ref: SlidingWindowUtils.java:113-114 — the window offset comes from
     // the local time zone's raw offset, so a GMT+8 session closes day

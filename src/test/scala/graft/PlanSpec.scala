@@ -47,9 +47,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("sliding windows: shuffles and scans are independent of window-size count") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def build(tag: String, sizes: Seq[scala.concurrent.duration.Duration]) = {
+    def build(tag: String, sizes: Seq[Duration], emptyAndSkip: Boolean) = {
       val src = FileSource(
         s"plan_ev_$tag", s"$sfDir/events.parquet", "parquet",
         keys = Some(Seq("user_id")),
@@ -59,30 +57,22 @@ class PlanSpec extends SparkSuite {
         s"plan_sliding_$tag", src,
         features = sizes.zipWithIndex.map { case (d, i) =>
           Feature(s"s$i", SlidingWindowTransform("value", AggFunc.Sum, d, 1.day, Seq("user_id"))) },
-        enableEmptyWindowOutput = false, skipSameWindowOutput = false))
+        enableEmptyWindowOutput = emptyAndSkip, skipSameWindowOutput = emptyAndSkip))
         .queryExecution.executedPlan
     }
-    // tree-based counts: the cached-partials plan is NOT a tree child, so
-    // these see only the post-cache work (the cache itself holds the one
-    // source scan + the map-side-combined pre-agg shuffle + the keys
-    // repartition, shared by every consumer)
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    def exchanges(p: org.apache.spark.sql.execution.SparkPlan): Int = shuffles(p)
-    def scans(p: org.apache.spark.sql.execution.SparkPlan): Int =
-      p.collect {
-        case _: FileSourceScanExec => 1
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      }.sum
-
-    val one = build("one", Seq(2.days))
-    val three = build("three", Seq(1.day, 2.days, 7.days))
-    // every window size is served from the SAME cached partials: adding
-    // sizes must not add exchanges, and no source scan may escape the cache
-    assert(scans(three) == 0, "a source scan escaped the cached partials")
-    assert(exchanges(three) == exchanges(one),
-      s"exchange count grew with window sizes: ${exchanges(one)} -> ${exchanges(three)}")
-    assert(exchanges(three) <= 2,
-      s"expected <=2 post-cache exchanges, got ${exchanges(three)}:\n$three")
+    // every window size is merged by the same aggregate over one scan: the
+    // map-side-combined pre-agg shuffle and the keys repartition of the
+    // panes are the only exchanges, and the merge aggregate and the
+    // skip-same lag reuse the second
+    for (emptyAndSkip <- Seq(false, true)) {
+      val one = build(s"one_$emptyAndSkip", Seq(2.days), emptyAndSkip)
+      val three = build(s"three_$emptyAndSkip", Seq(1.day, 2.days, 7.days), emptyAndSkip)
+      assert(fileScans(one) == 1 && fileScans(three) == 1,
+        s"expected one source scan, got ${fileScans(one)} / ${fileScans(three)}:\n$three")
+      assert(shuffles(three) == shuffles(one),
+        s"exchange count grew with window sizes: ${shuffles(one)} -> ${shuffles(three)}")
+      assert(shuffles(three) <= 2, s"expected <=2 exchanges, got ${shuffles(three)}:\n$three")
+    }
   }
 
   /** Count shuffle exchanges, descending into AQE wrappers —
