@@ -36,8 +36,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one shuffle for the pre-agg and one keys repartition of the
   * panes, which the merge aggregate and the skip-same `lag` both reuse.
-  * Intermediate size is pane rows × (maxSpan+1), independent of window-size
-  * count; list features copy each pane's list once per window end.
+  * Intermediate size is pane rows × (maxSpan+1), or × maxSpan without
+  * empty-window output, independent of window-size count; list features
+  * copy each pane's list once per window end.
   */
 object SlidingWindows {
 
