@@ -30,7 +30,7 @@ object Queries {
       oracle: Option[String])
 
   private def pq(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
+    graft.engine.Sources.readInferred(spark, "parquet", s"$dir/$table.parquet")
 
   private def fileSrc(
       name: String,

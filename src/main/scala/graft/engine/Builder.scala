@@ -96,7 +96,7 @@ final class Builder(spark: SparkSession) {
       }
     }
 
-    var df = phase1.foldLeft(source)(applyRowFeature)
+    var df = applyRowFeatures(source, phase1.toSeq)
 
     // All temporal joins, deduplicated per (table, keys)
     // (ref: spark_dataframe_builder.py:210-216,284-322).
@@ -115,11 +115,6 @@ final class Builder(spark: SparkSession) {
         s"Join right table '$tableName' has no timestamp field; " +
           "point-in-time join requires one")
       val right0 = buildWithTime(rightDesc)
-      // Evaluate each joined feature expression on the right table.
-      val withVals = fs.zipWithIndex.foldLeft(right0) { case (r, (f, i)) =>
-        val jt = f.transform.asInstanceOf[JoinTransform]
-        r.withColumn(s"__jv_$i", SparkCompiler.compile(jt.featureExpr))
-      }
       // Join expiry ("valid time interval"): when the right table is a
       // SlidingFeatureView with enable_empty_window_output=false, no row is
       // emitted for empty windows, so a joined value older than one step
@@ -133,9 +128,13 @@ final class Builder(spark: SparkSession) {
         case _ => None
       }
       val needsRightTime = expiry.isDefined
-      val right = withVals.select(
+      // each joined feature expression, evaluated on the right table
+      val right = right0.select(
         (keys.map(col) :+ col(EventTime.Col)) ++
-          fs.indices.map(i => col(s"__jv_$i")) ++
+          fs.zipWithIndex.map { case (f, i) =>
+            val jt = f.transform.asInstanceOf[JoinTransform]
+            SparkCompiler.compile(jt.featureExpr).as(s"__jv_$i")
+          } ++
           (if (needsRightTime) Seq(col(EventTime.Col).as("__rt")) else Nil): _*)
       val joinPairs =
         fs.toSeq.zipWithIndex.map { case (f, i) => (s"__jv_$i", f.name) } ++
@@ -153,17 +152,18 @@ final class Builder(spark: SparkSession) {
             df, right, keys, joinPairs,
             math.max(maxOutOfOrderness(v.source), maxOutOfOrderness(rightDesc)))
         } else TemporalJoin.pointInTime(df, right, keys, joinPairs)
-      expiry.foreach { validMs =>
-        fs.foreach { f =>
+      // expiry and the declared dtype in one projection per join group
+      val finals = fs.toSeq.flatMap { f =>
+        val expired = expiry.map { validMs =>
           val default = slidingDefault(rightDesc.asInstanceOf[SlidingFeatureView],
             f.transform.asInstanceOf[JoinTransform].featureExpr)
-          df = TemporalJoin.withExpiry(df, "__rt", f.name, validMs, default)
+          TemporalJoin.expiring("__rt", f.name, validMs, default)
         }
-        df = df.drop("__rt")
+        val v = expired.getOrElse(col(f.name))
+        f.dtype.map(dt => v.cast(dt.toSpark)).orElse(expired).map(f.name -> _)
       }
-      fs.foreach { f =>
-        f.dtype.foreach(dt => df = df.withColumn(f.name, col(f.name).cast(dt.toSpark)))
-      }
+      df = Projection.all(df, finals)
+      if (needsRightTime) df = df.drop("__rt")
     }
 
     if (df.isStreaming && windows.nonEmpty) {
@@ -178,17 +178,14 @@ final class Builder(spark: SparkSession) {
       val keySets = specs.map(_._2.groupByKeys).distinct
       require(keySets.size == 1,
         s"streaming over-windows in ${v.name} must share group_by_keys, got $keySets")
-      var prepped = df
-      specs.zipWithIndex.foreach { case ((_, tr), i) =>
+      val prepped = Projection.all(df, specs.zipWithIndex.flatMap { case ((_, tr), i) =>
         val e = SparkCompiler.compile(tr.expr)
-        prepped = prepped
-          .withColumn(s"__v_$i",
-            tr.filterExpr.map(fe => when(SparkCompiler.compile(fe), e)).getOrElse(e))
-          .withColumn(s"__m_$i",
-            tr.filterExpr
-              .map(fe => coalesce(SparkCompiler.compile(fe), lit(false)))
-              .getOrElse(lit(true)))
-      }
+        Seq(
+          s"__v_$i" -> tr.filterExpr.map(fe => when(SparkCompiler.compile(fe), e)).getOrElse(e),
+          s"__m_$i" -> tr.filterExpr
+            .map(fe => coalesce(SparkCompiler.compile(fe), lit(false)))
+            .getOrElse(lit(true)))
+      })
       df = graft.streaming.StreamingOverWindows(
         prepped,
         keySets.head,
@@ -198,9 +195,7 @@ final class Builder(spark: SparkSession) {
             tr.filterExpr.isDefined)
         },
         maxOutOfOrderness(v.source))
-      windows.foreach { f =>
-        f.dtype.foreach(dt => df = df.withColumn(f.name, col(f.name).cast(dt.toSpark)))
-      }
+      df = castDeclared(df, windows.toSeq)
     } else {
     // All over-windows in one select; identical WindowSpecs collapse into a
     // single Window operator under Catalyst. filter+limit features take the
@@ -211,27 +206,24 @@ final class Builder(spark: SparkSession) {
       val tr = f.transform.asInstanceOf[OverWindowTransform]
       tr.filterExpr.isDefined && tr.limit.isDefined
     }
-    plainFeats.foreach { f =>
+    df = Projection.add(df, plainFeats.toSeq.map { f =>
       val tr = f.transform.asInstanceOf[OverWindowTransform]
       val c0 = OverWindows.aggColumn(tr, Nil)
-      val c = f.dtype.map(dt => c0.cast(dt.toSpark)).getOrElse(c0)
-      df = df.withColumn(f.name, c)
-    }
+      Projection.Out(f.name, OverWindows.reads(tr), f.dtype.map(dt => c0.cast(dt.toSpark)).getOrElse(c0))
+    })
     flFeats
       .groupBy { f =>
         val tr = f.transform.asInstanceOf[OverWindowTransform]
         (tr.groupByKeys, tr.filterExpr, tr.windowSize, tr.limit)
       }
       .foreach { case (_, fs) =>
-        df = OverWindows.filteredLimitGroup(
-          df, fs.toSeq.map(f => (f.name, f.transform.asInstanceOf[OverWindowTransform])))
-        fs.foreach { f =>
-          f.dtype.foreach(dt => df = df.withColumn(f.name, col(f.name).cast(dt.toSpark)))
-        }
+        df = castDeclared(OverWindows.filteredLimitGroup(
+          df, fs.toSeq.map(f => (f.name, f.transform.asInstanceOf[OverWindowTransform]))),
+          fs.toSeq)
       }
     }
 
-    df = trailing.foldLeft(df)(applyRowFeature)
+    df = applyRowFeatures(df, trailing.toSeq)
 
     // Filter applied after all transforms (ref: derived_feature_view.py:79-83).
     v.filterExpr.foreach(f => df = df.filter(SparkCompiler.compile(f)))
@@ -264,19 +256,25 @@ final class Builder(spark: SparkSession) {
     }
   }
 
-  private def applyRowFeature(df: DataFrame, f: Feature): DataFrame = f.transform match {
-    case ExpressionTransform(e) =>
-      val c0 = SparkCompiler.compile(e)
-      val c = f.dtype.map(dt => c0.cast(dt.toSpark)).getOrElse(c0)
-      df.withColumn(f.name, c)
+  /** Per-row features in listed order, each seeing the ones before it. */
+  private def applyRowFeatures(df: DataFrame, fs: Seq[Feature]): DataFrame =
+    Projection.add(df, fs.map(rowFeature))
+
+  private def rowFeature(f: Feature): Projection.Out = f.transform match {
+    case ExpressionTransform(e) => Projection.Out.expr(f.name, e, f.dtype)
     case UdfTransform(fn, resultType, failOnException, valueOnException) =>
       val wrapped: Row => Any =
         if (failOnException) fn
         else r => try fn(r) catch { case _: Exception => valueOnException }
       val u = udf(new UDF1[Row, Any] { def call(r: Row): Any = wrapped(r) }, resultType.toSpark)
-      df.withColumn(f.name, u(struct(df.columns.toIndexedSeq.map(col): _*)))
+      // the UDF reads the whole row it is added to
+      Projection.Out(f.name, None, df => u(struct(df.columns.toIndexedSeq.map(col): _*)))
     case other => throw new IllegalArgumentException(s"not a per-row transform: $other")
   }
+
+  /** The declared dtypes of `fs`, cast in one projection. */
+  private def castDeclared(df: DataFrame, fs: Seq[Feature]): DataFrame =
+    Projection.all(df, fs.flatMap(f => f.dtype.map(dt => f.name -> col(f.name).cast(dt.toSpark))))
 
   // ---------------------------------------------------------------- sliding
 
@@ -298,9 +296,9 @@ final class Builder(spark: SparkSession) {
           throw new IllegalArgumentException(s"SlidingFeatureView does not accept $other")
       }
     }
-    val input = pre.foldLeft(source)(applyRowFeature)
+    val input = applyRowFeatures(source, pre.toSeq)
     if (input.isStreaming) return buildSlidingStream(v, input, sliding.toSeq, post.toSeq)
-    var out = SlidingWindows(
+    val out = SlidingWindows(
       input,
       sliding.toSeq.map(f =>
         SlidingWindows.SlidingFeature(f.name, f.transform.asInstanceOf[SlidingWindowTransform])),
@@ -308,10 +306,7 @@ final class Builder(spark: SparkSession) {
       v.skipSameWindowOutput)
     // Declared feature dtypes (ref: sliding Feature dtype casts applied to
     // the aggregation results).
-    sliding.foreach { f =>
-      f.dtype.foreach(dt => out = out.withColumn(f.name, col(f.name).cast(dt.toSpark)))
-    }
-    finishSliding(v, out, sliding.toSeq, post.toSeq)
+    finishSliding(v, castDeclared(out, sliding.toSeq), sliding.toSeq, post.toSeq)
   }
 
   /** Shared tail of the sliding build: expose the window-close time under
@@ -335,14 +330,13 @@ final class Builder(spark: SparkSession) {
           timestamp_millis(wt),
           graft.expr.TimeFormats.toJavaDateFormat(strftime))
     }
-    var out = df0.withColumn(v.timestampFieldName, tsCol)
-    post.foreach { case (n, e) => out = out.withColumn(n, SparkCompiler.compile(e)) }
+    var out = Projection.add(df0,
+      Projection.Out(v.timestampFieldName, Set.empty[String], tsCol) +:
+        post.map { case (n, e) => Projection.Out.expr(n, e) })
     v.filterExpr.foreach(f => out = out.filter(SparkCompiler.compile(f)))
     val outCols = (v.groupByKeys :+ v.timestampFieldName) ++
       sliding.map(_.name) ++ post.map(_._1)
-    out
-      .withColumn(EventTime.Col, wt)
-      .select(outCols.distinct.map(col) :+ col(EventTime.Col): _*)
+    out.select(outCols.distinct.map(col) :+ wt.as(EventTime.Col): _*)
   }
 
   /** Unbounded path: same SlidingFeatureView semantics via the stateful
@@ -355,16 +349,12 @@ final class Builder(spark: SparkSession) {
       post: Seq[(String, String)]): DataFrame = {
     import graft.streaming.StreamingSlidingWindows
     val trs = sliding.map(f => (f, f.transform.asInstanceOf[SlidingWindowTransform]))
-    val withVals = trs.zipWithIndex.foldLeft(input) { case (df, ((_, tr), i)) =>
+    val withVals = Projection.all(input, trs.zipWithIndex.map { case ((_, tr), i) =>
       val e = SparkCompiler.compile(tr.expr)
-      val vcol = tr.filterExpr match {
-        case Some(fe) => when(SparkCompiler.compile(fe), e)
-        case None     => e
-      }
-      df.withColumn(s"__v_$i", vcol)
-    }
+      s"__v_$i" -> tr.filterExpr.fold(e)(fe => when(SparkCompiler.compile(fe), e))
+    })
     val maxOoo = maxOutOfOrderness(v.source)
-    var out = StreamingSlidingWindows(
+    val out = StreamingSlidingWindows(
       withVals,
       v.groupByKeys,
       trs.map { case (f, tr) =>
@@ -373,13 +363,10 @@ final class Builder(spark: SparkSession) {
       v.enableEmptyWindowOutput,
       v.skipSameWindowOutput,
       maxOoo)
-    sliding.foreach { f =>
-      f.dtype.foreach(dt => out = out.withColumn(f.name, col(f.name).cast(dt.toSpark)))
-    }
-    out = out
+    val timed = castDeclared(out, sliding)
       .withColumn(SparkCompiler.WindowTimeCol, col("window_time"))
       .drop("window_time")
-    finishSliding(v, out, sliding, post)
+    finishSliding(v, timed, sliding, post)
   }
 
   private def maxOutOfOrderness(desc: TableDescriptor): Long = desc match {

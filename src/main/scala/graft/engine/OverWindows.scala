@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.expr.SparkCompiler
+import graft.expr.{ExprUtils, SparkCompiler}
 import graft.table.{AggFunc, OverWindowTransform}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
@@ -46,6 +46,10 @@ object OverWindows {
         "(see SCALE.md, 'Keyless over-windows').")
     Window.partitionBy()
   }
+
+  /** The columns an over-window reads besides the event time. */
+  def reads(tr: OverWindowTransform): Set[String] =
+    ((tr.expr +: tr.filterExpr.toSeq).flatMap(ExprUtils.variables) ++ tr.groupByKeys).toSet
 
   def aggColumn(tr: OverWindowTransform, tieBreaks: Seq[String]): Column = {
     val e = SparkCompiler.compile(tr.expr)
@@ -143,8 +147,8 @@ object OverWindows {
     // and the cut + aggregation happen after propagation, per row —
     // propagating the finished aggregate would freeze the cut at the last
     // MATCHING row's time and leak expired rows into later output rows.
-    val carrier0 = feats.zipWithIndex.foldLeft(df.filter(filterC)) {
-      case (d, ((_, tr), i)) =>
+    val carrier = Projection.all(df.filter(filterC), feats.zipWithIndex.map {
+      case ((_, tr), i) =>
         val c = winMs match {
           case None => aggColumn(tr.copy(filterExpr = None), Nil)
           case Some(_) =>
@@ -159,13 +163,12 @@ object OverWindows {
               collect_list(when(e.isNotNull, struct(col(t).as("t"), e.as("v")))).over(spec)
             }
         }
-        d.withColumn(s"__flv_$i", c)
-    }
-    val flvTypes = feats.indices.map(i => carrier0.schema(s"__flv_$i").dataType)
-    val carrier = carrier0.withColumn("__isf", lit(1))
-    val left = feats.indices.foldLeft(df) { (d, i) =>
-      d.withColumn(s"__flv_$i", lit(null).cast(flvTypes(i)))
-    }.withColumn("__isf", lit(0))
+        s"__flv_$i" -> c
+    } :+ ("__isf" -> lit(1)))
+    val left = Projection.all(df, feats.indices.map { i =>
+      val flv = s"__flv_$i"
+      flv -> lit(null).cast(carrier.schema(flv).dataType)
+    } :+ ("__isf" -> lit(0)))
     val base =
       if (tr0.groupByKeys.nonEmpty) Window.partitionBy(tr0.groupByKeys.map(col): _*)
       else keylessWindowBase(tr0)
@@ -173,12 +176,10 @@ object OverWindows {
     // sees its own contribution
     val w = base.orderBy(col(t).asc, col("__isf").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    var out = left.unionByName(carrier)
-    feats.zipWithIndex.foreach { case (_, i) =>
-      out = out.withColumn(s"__p_$i", last(col(s"__flv_$i"), ignoreNulls = true).over(w))
-    }
-    out = out.filter(col("__isf") === 0)
-    feats.zipWithIndex.foreach { case ((name, tr), i) =>
+    val propagated = Projection.all(left.unionByName(carrier), feats.indices.map { i =>
+      s"__p_$i" -> last(col(s"__flv_$i"), ignoreNulls = true).over(w)
+    }).filter(col("__isf") === 0)
+    val values = feats.zipWithIndex.map { case ((name, tr), i) =>
       val valueC = winMs match {
         case None => col(s"__p_$i")
         case Some(ms) =>
@@ -187,15 +188,14 @@ object OverWindows {
           else
             hofAgg(tr.aggFunc, filter(col(s"__p_$i"), p => p("t") >= col(t) - lit(ms)))
       }
-      val withDefault = tr.aggFunc match {
+      name -> (tr.aggFunc match {
         case AggFunc.Sum | AggFunc.Count | AggFunc.RowNumber =>
           coalesce(valueC, lit(0))
         case _ => valueC
-      }
-      out = out.withColumn(name, withDefault)
-        .drop(s"__flv_$i", s"__p_$i")
+      })
     }
-    out.drop("__isf")
+    Projection.all(propagated, values)
+      .drop(feats.indices.flatMap(i => Seq(s"__flv_$i", s"__p_$i")) :+ "__isf": _*)
   }
 
   /** VALUE_COUNTS: map of value → occurrence count

@@ -178,21 +178,28 @@ object SlidingWindows {
 
     val windowTime = ((col(B) + 1) * step + offset - 1).as(SparkCompiler.WindowTimeCol)
     val withTime = kept.select(keys.map(col) ++ (windowTime +: featCols) :+ col(B): _*)
-    val out = postExprs.foldLeft(withTime) { case (df, (n, e)) =>
-      df.withColumn(n, SparkCompiler.compile(e))
-    }
-
+    val out = withPost(withTime, postExprs)
     val result =
-      if (skipSameWindowOutput) {
-        val keyWin =
-          if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*) else Window.partitionBy()
-        out
-          .withColumn("__sig", comparableSig(out, feats.map(_.name)))
-          .withColumn("__prev", lag(col("__sig"), 1).over(keyWin.orderBy(col(B))))
-          .filter(col("__prev").isNull || !(col("__sig") <=> col("__prev")))
-          .drop("__sig", "__prev")
-      } else out
+      if (skipSameWindowOutput) dropRepeats(out, keys, feats.map(_.name), col(B)) else out
     result.drop(B)
+  }
+
+  /** Post-expressions over the window results, in listed order. */
+  private def withPost(df: DataFrame, postExprs: Seq[(String, String)]): DataFrame =
+    Projection.add(df, postExprs.map { case (n, e) => Projection.Out.expr(n, e) })
+
+  /** Drops each row whose feature values equal the previous row's of the
+    * same keys in `order`. The lag reads the signature column: lagging the
+    * signature expression in the same projection makes Catalyst build the
+    * struct twice and carry both copies through the window's sort.
+    */
+  private def dropRepeats(df: DataFrame, keys: Seq[String], featNames: Seq[String], order: Column): DataFrame = {
+    val keyWin =
+      if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*) else Window.partitionBy()
+    df.withColumn("__sig", comparableSig(df, featNames))
+      .withColumn("__prev", lag(col("__sig"), 1).over(keyWin.orderBy(order)))
+      .filter(col("__prev").isNull || !(col("__sig") <=> col("__prev")))
+      .drop("__sig", "__prev")
   }
 
   /** Signature struct for the skip-same comparison. `<=>` cannot compare
@@ -222,27 +229,15 @@ object SlidingWindows {
       keys: Seq[String],
       skipSame: Boolean,
       postExprs: Seq[(String, String)]): DataFrame = {
-    val keyWin =
-      if (keys.nonEmpty) Window.partitionBy(keys.map(col): _*) else Window.partitionBy()
-    val w = keyWin.orderBy(col(t)).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val agged = feats.foldLeft(input) { case (df, f) =>
+    val agged = Projection.add(input, feats.map { f =>
       val tr = OverWindowTransform(
         f.tr.expr, f.tr.aggFunc, None, f.tr.groupByKeys, f.tr.filterExpr, None)
-      df.withColumn(f.name, OverWindows.aggColumn(tr, Nil))
-    }
-    val withTime = agged.withColumn(SparkCompiler.WindowTimeCol, col(t))
-    val withPost = postExprs.foldLeft(withTime) { case (df, (n, e)) =>
-      df.withColumn(n, SparkCompiler.compile(e))
-    }
+      Projection.Out(f.name, OverWindows.reads(tr), OverWindows.aggColumn(tr, Nil))
+    } :+ Projection.Out(SparkCompiler.WindowTimeCol, Set.empty[String], col(t)))
     val outCols = keys.map(col) ++ Seq(col(SparkCompiler.WindowTimeCol)) ++
       feats.map(f => col(f.name)) ++ postExprs.map { case (n, _) => col(n) }
-    val out = withPost.select(outCols: _*)
-    if (skipSame) {
-      out
-        .withColumn("__sig", comparableSig(out, feats.map(_.name)))
-        .withColumn("__prev", lag(col("__sig"), 1).over(keyWin.orderBy(col(SparkCompiler.WindowTimeCol))))
-        .filter(col("__prev").isNull || !(col("__sig") <=> col("__prev")))
-        .drop("__sig", "__prev")
-    } else out
+    val out = withPost(agged, postExprs).select(outCols: _*)
+    if (skipSame) dropRepeats(out, keys, feats.map(_.name), col(SparkCompiler.WindowTimeCol))
+    else out
   }
 }

@@ -2,8 +2,10 @@ package graft.engine
 
 import graft.table.{DataGenSource, FileSource, HiveSource, KafkaSource, RandomField, SequenceField}
 import graft.types._
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.concurrent.duration.Duration
 
@@ -15,22 +17,84 @@ object Sources {
 
   def read(spark: SparkSession, s: FileSource): DataFrame = {
     if (!s.isBounded) return readStream(spark, s)
-    val reader = spark.read.format(s.format)
     // Reference CSV semantics: a DECLARED schema means headerless data —
     // every line is a record and names come from the schema
     // (local/file_system_utils.py:43-50 `pd.read_csv(names=...)`); only a
     // schema-less read treats the first line as the header to infer from.
-    val withSchema = s.schema match {
+    val df = s.schema match {
       case Some(sc) =>
+        val reader = spark.read.format(s.format)
         (if (s.format == "csv") reader.option("header", "false") else reader)
-          .schema(sc.toSpark)
+          .schema(sc.toSpark).load(s.path)
       case None =>
-        if (s.format == "csv")
-          reader.option("header", "true").option("inferSchema", "true")
-        else reader
+        val opts =
+          if (s.format == "csv") Map("header" -> "true", "inferSchema" -> "true")
+          else Map.empty[String, String]
+        readInferred(spark, s.format, s.path, opts)
     }
-    val df = withSchema.load(s.path)
     EventTime.append(df, s.timestampField, s.timestampFormat)
+  }
+
+  /** Key of one inferred schema: everything the inference reads. The set
+    * SQL confs are part of it because some change the inferred types
+    * (`spark.sql.legacy.parquet.nanosAsLong` reads TIMESTAMP(NANOS) as
+    * int64), and the leaf files are listed as (path, length, modification
+    * time) so that a rewritten or added file misses.
+    */
+  private final case class SchemaKey(
+      format: String,
+      path: String,
+      options: Map[String, String],
+      confs: Map[String, String],
+      files: Seq[(String, Long, Long)])
+
+  /** Bound on remembered schemas; the map is emptied when it is reached. */
+  private val MaxSchemas = 256
+  // concurrent: a MaterializationGroup builds its views on several threads
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** Batch read of `path` without a declared schema. Schema inference is a
+    * Spark job (parquet reads part-file footers, CSV scans the data), so
+    * the inferred schema is remembered per [[SchemaKey]] and a later read
+    * of the unchanged input passes it to the reader instead, which starts
+    * no job. A path that lists no file is read as is, so that the reader
+    * reports it.
+    */
+  def readInferred(
+      spark: SparkSession,
+      format: String,
+      path: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.format(format).options(options)
+    leafFiles(spark, path) match {
+      case None => reader.load(path)
+      case Some(files) =>
+        val key = SchemaKey(format, path, options, spark.conf.getAll, files)
+        schemas.get(key) match {
+          case null =>
+            val df = reader.load(path)
+            if (schemas.size >= MaxSchemas) schemas.clear()
+            schemas.put(key, df.schema)
+            df
+          case schema => reader.schema(schema).load(path)
+        }
+    }
+  }
+
+  /** The files under `path` (a file, a directory or a glob), sorted, as
+    * (path, length, modification time); None when nothing matches.
+    */
+  private def leafFiles(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(leaves)
+      else Iterator(st)
+    Option(fs.globStatus(p)).filter(_.nonEmpty).map { roots =>
+      roots.iterator.flatMap(leaves)
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+        .toVector.sorted
+    }
   }
 
   /** Unbounded scan via Structured Streaming; Spark's streaming file source

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,19 +50,22 @@ object TemporalJoin {
         (keys :+ t).map(col): _*)
     val rvalsType = packed.schema("__rvals").dataType
 
+    // Tag and align both sides in one projection each: the right side
+    // carries nulls for left-only columns.
     val leftCols = left.columns.toSeq
-    val leftTagged = left
-      .withColumn("__is_left", lit(1))
-      .withColumn("__rvals", lit(null).cast(rvalsType))
-    val rightTagged = packed
-      .withColumn("__is_left", lit(0))
-    // Align schemas: right side carries nulls for left-only columns.
     val allCols = (leftCols ++ Seq("__is_left", "__rvals")).distinct
-    val rightAligned = allCols.foldLeft(rightTagged) { (df, c) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(left.schema(c).dataType))
-    }.select(allCols.map(col): _*)
-    val unioned = leftTagged.select(allCols.map(col): _*).unionByName(rightAligned)
+    val leftTagged = left.select(allCols.map {
+      case "__is_left" => lit(1).as("__is_left")
+      case "__rvals"   => lit(null).cast(rvalsType).as("__rvals")
+      case c           => col(c)
+    }: _*)
+    val packedCols = packed.columns.toSet
+    val rightAligned = packed.select(allCols.map {
+      case "__is_left"        => lit(0).as("__is_left")
+      case c if packedCols(c) => col(c)
+      case c                  => lit(null).cast(left.schema(c).dataType).as(c)
+    }: _*)
+    val unioned = leftTagged.unionByName(rightAligned)
 
     // Right rows sort before left rows at equal time so a right version at
     // exactly t is visible to a left row at t (right_time <= left_time);
@@ -91,11 +94,13 @@ object TemporalJoin {
       rightTimeCol: String,
       valueCol: String,
       validMillis: Long,
-      default: org.apache.spark.sql.Column): DataFrame =
-    joined.withColumn(
-      valueCol,
-      when(col(EventTime.Col) < col(rightTimeCol) + lit(validMillis), col(valueCol))
-        .otherwise(default))
+      default: Column): DataFrame =
+    joined.withColumn(valueCol, expiring(rightTimeCol, valueCol, validMillis, default))
+
+  /** The value [[withExpiry]] gives `valueCol`. */
+  def expiring(rightTimeCol: String, valueCol: String, validMillis: Long, default: Column): Column =
+    when(col(EventTime.Col) < col(rightTimeCol) + lit(validMillis), col(valueCol))
+      .otherwise(default)
 
   /** Key-filter: restrict to rows whose key fields appear in `keysDf`
     * (ref: python/feathub/processors/spark/

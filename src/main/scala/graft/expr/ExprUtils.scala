@@ -12,6 +12,8 @@ object ExprUtils {
     */
   def variables(expr: String): Set[String] = collect(Parser.parse(expr))
 
+  def variables(node: ExprNode): Set[String] = collect(node)
+
   private def collect(n: ExprNode): Set[String] = n match {
     case Ident(name)          => Set(name)
     case BinaryOp(_, l, r)    => collect(l) ++ collect(r)

@@ -172,6 +172,15 @@ sealed trait TableDescriptor {
   * file_system_source.py:22-105). `format` ∈ csv/json/parquet.
   * `isBounded = false` reads via Structured Streaming (readStream; requires
   * an explicit schema, per Spark's streaming file source).
+  *
+  * A batch read without a declared `schema` infers it, which is a Spark
+  * job, at most once per process for each unchanged input
+  * (`Sources.readInferred`): the inferred schema is kept under the format,
+  * the path, the reader options, the session's set SQL confs and the
+  * sorted listing of the files under the path as (path, length,
+  * modification time), and later reads with an equal key pass it to the
+  * reader. A rewritten or added file, or a changed conf, therefore infers
+  * again. At most 256 schemas are kept; reaching the bound forgets them all.
   */
 final case class FileSource(
     name: String,

@@ -1332,6 +1332,142 @@ class EngineSpec extends SparkSuite {
     assert(e.getMessage.contains("same name"))
   }
 
+  test("per-row features share one projection unless one reads another") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val view = DerivedFeatureView(
+      "v_one_projection", purchaseSource,
+      features = Seq(
+        Feature.expr("c2", "cost * 2"),
+        Feature.expr("d2", "distance * 2"),
+        Feature.expr("c4", "c2 * 2"),     // reads c2: the next projection
+        Feature.expr("cost", "cost + 1"), // replaces a source column
+        Feature.expr("c5", "cost + c2")), // sees the replaced cost
+      keepSourceFields = true)
+    val df = new graft.engine.Builder(spark).build(view)
+    val first = df.orderBy("time").head()
+    assert(Seq("c2", "d2", "c4", "cost", "c5").map(first.getAs[Long]) ==
+      Seq(200L, 200L, 400L, 101L, 301L))
+    val names = Set("c2", "d2", "c4", "cost", "c5")
+    val projections = df.queryExecution.analyzed.collect { case p: Project =>
+      p.projectList.collect { case a: Alias if names(a.name) => a.name }.toSet
+    }.filter(_.nonEmpty).reverse
+    assert(projections == Seq(Set("c2", "d2"), Set("c4", "cost"), Set("c5")))
+  }
+
+  /** The Spark jobs `body` starts on this thread. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's start is
+      // seen, so is every job the body started
+      sc.setJobGroup(marker, "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "the marker job's start never arrived")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a schema-less parquet view a second time starts no Spark job") {
+    val src = FileSource(
+      "schema_once_src", writeTempParquet(purchases, "schema_once"), "parquet",
+      keys = Some(Seq("name")),
+      timestampField = Some("time"),
+      timestampFormat = "%Y-%m-%d %H:%M:%S")
+    val view = DerivedFeatureView(
+      "v_schema_once", src,
+      features = Seq(Feature.expr("total", "cost + distance")),
+      keepSourceFields = true)
+    // each build is a new Builder, so nothing is memoized between them
+    def build() = new graft.engine.Builder(spark).build(view)
+    assert(jobsStartedBy(build()) >= 1, "the first build infers the schema")
+    var second: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { second = build() } == 0)
+    assert(second.orderBy("time").collect().map(_.getAs[Long]("total")).toSeq ==
+      Seq(200L, 650L, 500L, 450L, 1000L, 1400L))
+  }
+
+  test("a resolved schema follows rewritten files, parquet confs and CSV headers") {
+    import graft.engine.Sources
+    import org.apache.spark.sql.types.{LongType, StructType}
+    def fresh(format: String, path: String, opts: Map[String, String] = Map.empty) =
+      spark.read.format(format).options(opts).load(path).schema
+    def resolved(format: String, path: String, opts: Map[String, String] = Map.empty) =
+      Sources.readInferred(spark, format, path, opts).schema
+
+    // the same path rewritten with another schema
+    val rewritten = s"${SparkSuite.tmpDir}/resolver_rewrite"
+    spark.range(3).toDF("a").write.mode("overwrite").parquet(rewritten)
+    val before = resolved("parquet", rewritten)
+    assert(before == fresh("parquet", rewritten))
+    spark.range(3).selectExpr("cast(id AS string) AS b", "id * 2 AS c")
+      .write.mode("overwrite").parquet(rewritten)
+    assert(resolved("parquet", rewritten) == fresh("parquet", rewritten))
+    assert(resolved("parquet", rewritten) != before)
+
+    // a TIMESTAMP(NANOS) column is int64 only under nanosAsLong
+    val nanos = s"${SparkSuite.tmpDir}/resolver_nanos"
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val nanosPath = new org.apache.hadoop.fs.Path(s"$nanos/part-0.parquet")
+    nanosPath.getFileSystem(hadoopConf).delete(nanosPath.getParent, true)
+    val parquetType = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(nanosPath).withType(parquetType).withConf(hadoopConf).build()
+    try writer.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(parquetType)
+      .newGroup().append("ts", 1706659165261000000L))
+    finally writer.close()
+    val nanosConf = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(nanosConf)
+    def schemaOrError(read: => StructType): Either[String, StructType] =
+      try Right(read) catch { case e: Exception => Left(e.getClass.getName) }
+    def check(): Unit = assert(
+      schemaOrError(resolved("parquet", nanos)) == schemaOrError(fresh("parquet", nanos)))
+    try {
+      spark.conf.set(nanosConf, "true")
+      check()
+      assert(resolved("parquet", nanos).head.dataType == LongType)
+      spark.conf.set(nanosConf, "false")
+      check()
+      spark.conf.set(nanosConf, "true")
+      check()
+    } finally saved match {
+      case Some(v) => spark.conf.set(nanosConf, v)
+      case None    => spark.conf.unset(nanosConf)
+    }
+
+    // a header CSV: the header names the columns, and a second read, which
+    // passes the resolved schema, skips the header line as the first did
+    val csvDir = new java.io.File(s"${SparkSuite.tmpDir}/resolver_csv")
+    csvDir.mkdirs()
+    java.nio.file.Files.writeString(
+      new java.io.File(csvDir, "data.csv").toPath, "k,v,note\n1,2.5,x\n2,,y\n3,4.0,z\n")
+    val src = FileSource("resolver_csv_src", csvDir.getPath, "csv")
+    val opts = Map("header" -> "true", "inferSchema" -> "true")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("k").collect().toSeq
+    val firstRead = graft.engine.Sources.read(spark, src)
+    val secondRead = graft.engine.Sources.read(spark, src)
+    assert(secondRead.schema == fresh("csv", csvDir.getPath, opts))
+    assert(secondRead.schema.fieldNames.toSeq == Seq("k", "v", "note"))
+    assert(rows(secondRead) == rows(firstRead))
+    assert(rows(secondRead) == rows(spark.read.options(opts).csv(csvDir.getPath)))
+    assert(rows(secondRead).map(_.getInt(0)) == Seq(1, 2, 3))
+  }
+
   test("online store upsert keeps latest per key") {
     import graft.client.MemoryOnlineStore
     // materialize → serve with NO manual registerKeys: put must register the
