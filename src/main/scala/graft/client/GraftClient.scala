@@ -6,6 +6,7 @@ import graft.table._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
@@ -38,13 +39,25 @@ final class GraftClient(val spark: SparkSession) {
     Registry.register(desc)
     var df = builder.buildWithTime(desc)
     keysDf.foreach(k => df = TemporalJoin.filterByKeys(df, k))
+    EventTime.drop(inRange(desc, df, startMillis, endMillis))
+  }
+
+  /** `df`, built from `desc` with the engine time column, cut to
+    * start <= event time < end; unchanged when neither bound is given.
+    */
+  private def inRange(
+      desc: TableDescriptor,
+      df: DataFrame,
+      startMillis: Option[Long],
+      endMillis: Option[Long]): DataFrame = {
     if (startMillis.isDefined || endMillis.isDefined)
       require(desc.timestampField.isDefined,
         s"Feature ${desc.name} is missing timestamp_field; it cannot be " +
           "ranged by start/end") // ref: spark_dataframe_builder.py:119-126
-    startMillis.foreach(s => df = df.filter(col(EventTime.Col) >= s))
-    endMillis.foreach(e => df = df.filter(col(EventTime.Col) < e))
-    EventTime.drop(df)
+    var out = df
+    startMillis.foreach(s => out = out.filter(col(EventTime.Col) >= s))
+    endMillis.foreach(e => out = out.filter(col(EventTime.Col) < e))
+    out
   }
 
   /** Key-filtered read where the key set is itself a table descriptor —
@@ -85,13 +98,9 @@ final class GraftClient(val spark: SparkSession) {
     // Time-bounded ETL writes: only features with start <= event time < end
     // reach the sink (ref: feathub_client.py:92-116 materialize_features
     // start_datetime/end_datetime).
-    def read(): DataFrame = getFeatures(desc, None, startMillis, endMillis)
-    def readWithTime(): DataFrame = {
-      var df = builder.buildWithTime(desc)
-      startMillis.foreach(s => df = df.filter(col(EventTime.Col) >= s))
-      endMillis.foreach(e => df = df.filter(col(EventTime.Col) < e))
-      df
-    }
+    def readWithTime(): DataFrame =
+      inRange(desc, builder.buildWithTime(desc), startMillis, endMillis)
+    def read(): DataFrame = EventTime.drop(readWithTime())
     sinkEff match {
       case FileSink(path, format, mode, partCols) =>
         val w = read().write.format(format).mode(mode)
@@ -398,6 +407,8 @@ object MemoryOnlineStore {
   // (parallel test suites, concurrent foreachBatch sinks) and an
   // unsynchronized HashMap corrupts under concurrent upserts.
   private val tables = mutable.Map.empty[String, mutable.Map[Seq[Any], Entry]]
+  // the schema each table was last written with, engine time column excluded
+  private val schemas = mutable.Map.empty[String, StructType]
 
   /** Upsert latest-per-key rows. `df` should carry the engine's epoch-millis
     * event-time column ([[EventTime.Col]], appended by the builder from the
@@ -413,6 +424,7 @@ object MemoryOnlineStore {
       else df.withColumn("__t__", lit(0L))
     val collected = withT.collect() // outside the lock: runs a Spark job
     tables.synchronized {
+      schemas(name) = StructType(df.schema.filterNot(_.name == EventTime.Col))
       val table = tables.getOrElseUpdate(name, mutable.Map.empty)
       collected.foreach { r =>
         val keyVals = keys.map(k => r.getAs[Any](k))
@@ -424,6 +436,12 @@ object MemoryOnlineStore {
         }
       }
     }
+  }
+
+  /** The schema table `name` was last written with. */
+  def schemaOf(name: String): StructType = tables.synchronized {
+    schemas.getOrElse(name, throw new NoSuchElementException(
+      s"online store table $name has never been written"))
   }
 
   /** Latest-per-key snapshot of a store table (for [[graft.table.MemoryStoreSource]]). */
@@ -454,5 +472,7 @@ object MemoryOnlineStore {
       case None     => false
     }
 
-  def clear(): Unit = tables.synchronized { tables.clear(); keyFields.clear() }
+  def clear(): Unit = tables.synchronized {
+    tables.clear(); keyFields.clear(); schemas.clear()
+  }
 }

@@ -1,5 +1,8 @@
 package graft.client
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** One requested field of a KV lookup. `entryKeys = Some(ks)` restricts a
   * map-typed field to those entries — the static map-entry pushdown: when a
   * lookup join only uses `m['k']`-style literal subscripts of a map
@@ -18,12 +21,32 @@ trait KvStore {
   /** Key fields the table was registered with. */
   def keyFields(table: String): Seq[String]
 
+  /** The schema the table was written with. */
+  def schema(table: String): StructType
+
   /** Latest-per-key snapshot rows with the request's projection applied:
     * only the requested fields are present, and map-typed fields with
     * `entryKeys` set carry ONLY those entries — a real Redis impl issues
     * HMGET for exactly those hash fields.
     */
   def fetch(table: String, request: Seq[FieldRequest]): Seq[Map[String, Any]]
+}
+
+object KvStore {
+
+  /** Store rows as a DataFrame of `columns`, each typed as in `schema`
+    * (the schema the table was written with) and nullable.
+    */
+  def toDf(
+      spark: SparkSession,
+      schema: StructType,
+      rows: Seq[Map[String, Any]],
+      columns: Seq[String]): DataFrame = {
+    val data = rows.map(m => Row.fromSeq(columns.map(c => m.getOrElse(c, null))))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(data.toList),
+      StructType(columns.map(c => schema(c).copy(nullable = true))))
+  }
 }
 
 /** [[KvStore]] over [[MemoryOnlineStore]], standing in for Redis. Records
@@ -38,6 +61,9 @@ object MemoryKvStore extends KvStore {
 
   override def keyFields(table: String): Seq[String] =
     MemoryOnlineStore.keyFieldsOf(table)
+
+  override def schema(table: String): StructType =
+    MemoryOnlineStore.schemaOf(table)
 
   override def fetch(table: String, request: Seq[FieldRequest]): Seq[Map[String, Any]] = {
     synchronized { requests += table -> request }

@@ -2,9 +2,8 @@ package graft.engine
 
 import graft.client.{FieldRequest, KvStore}
 import graft.expr.{ExprUtils, SparkCompiler}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Processing-time lookup join against a pluggable [[KvStore]] table
   * (ref: the reference's RedisSource lookup join,
@@ -64,7 +63,8 @@ object LookupJoin {
       .filterNot(fr => keyCols.contains(fr.field))
     val fetchFields = keyCols.map(FieldRequest(_, None)) ++ request
     val rows = store.fetch(table, fetchFields)
-    val snapshot = toDf(spark, rows, fetchFields.map(_.field))
+    require(rows.nonEmpty, "lookup join against an empty store table")
+    val snapshot = KvStore.toDf(spark, store.schema(table), rows, fetchFields.map(_.field))
     var out = left.join(broadcast(snapshot), keyCols, "left")
     features.foreach { case (name, e) =>
       out = out.withColumn(name, SparkCompiler.compile(e))
@@ -72,33 +72,5 @@ object LookupJoin {
     // drop raw fetched columns unless a feature output reuses the name
     val keep = features.map(_._1).toSet ++ keyCols
     out.drop(request.map(_.field).filterNot(keep.contains): _*)
-  }
-
-  /** Store rows → DataFrame with inferred schema (maps included — the
-    * generic store snapshot path only infers scalars).
-    */
-  private def toDf(spark: SparkSession, rows: Seq[Map[String, Any]], columns: Seq[String]): DataFrame = {
-    require(rows.nonEmpty, "lookup join against an empty store table")
-    def typeOf(v: Any): DataType = v match {
-      case _: java.lang.Long | _: Long       => LongType
-      case _: java.lang.Integer | _: Int     => IntegerType
-      case _: java.lang.Double | _: Double   => DoubleType
-      case _: java.lang.Float | _: Float     => FloatType
-      case _: java.lang.Boolean | _: Boolean => BooleanType
-      case _: java.sql.Timestamp             => TimestampType
-      case m: Map[_, _] =>
-        val vt = m.values.find(_ != null).map(typeOf).getOrElse(StringType)
-        MapType(StringType, vt, valueContainsNull = true)
-      case _ => StringType
-    }
-    val schema = StructType(columns.map { c =>
-      val sample = rows.iterator
-        .map(_.getOrElse(c, null))
-        .find(v => v != null && (v match { case m: Map[_, _] => m.nonEmpty; case _ => true }))
-        .orNull
-      StructField(c, typeOf(sample), nullable = true)
-    })
-    val data = rows.map(m => Row.fromSeq(columns.map(c => m.getOrElse(c, null))))
-    spark.createDataFrame(spark.sparkContext.parallelize(data.toList), schema)
   }
 }

@@ -121,14 +121,10 @@ object OverWindows {
     * rows frame IS the matching-rows frame), then propagate each row's
     * latest filtered aggregate with a running last-value — the same
     * union+running-last shape as the temporal join, one extra shuffle per
-    * filtered-limit feature group and no quadratic state.
-    */
-  def filteredLimit(df: DataFrame, name: String, tr: OverWindowTransform): DataFrame =
-    filteredLimitGroup(df, Seq((name, tr)))
-
-  /** Grouped variant: features sharing (keys, filter, window, limit) ride
-    * one filtered-subset union — the same fusion the reference applies to
-    * identical over-window descriptors (OverWindowDescriptor grouping,
+    * filtered-limit feature group and no quadratic state. Features
+    * sharing (keys, filter, window, limit) ride one filtered-subset union —
+    * the same fusion the reference applies to identical over-window
+    * descriptors (OverWindowDescriptor grouping,
     * spark_dataframe_builder.py:184-186).
     */
   def filteredLimitGroup(df: DataFrame, feats: Seq[(String, OverWindowTransform)]): DataFrame = {

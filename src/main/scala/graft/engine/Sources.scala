@@ -308,31 +308,14 @@ object Sources {
 
   /** Batch snapshot of an in-process online-store table — the read-back
     * path of MemoryStoreSink (ref: python/feathub/feature_tables/sources/
-    * memory_store_source.py:24-40). Schema inferred from stored values.
+    * memory_store_source.py:24-40), typed as the table was written.
     */
   def fromMemoryStore(spark: SparkSession, s: graft.table.MemoryStoreSource): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val rows = graft.client.MemoryOnlineStore.snapshotRows(s.tableName)
+    import graft.client.{KvStore, MemoryOnlineStore}
+    val rows = MemoryOnlineStore.snapshotRows(s.tableName)
     require(rows.nonEmpty, s"online store table ${s.tableName} is empty or unknown")
-    val columns = rows.head.keys.toSeq.sorted
-    def typeOf(v: Any): DataType = v match {
-      case _: java.lang.Long | _: Long       => LongType
-      case _: java.lang.Integer | _: Int     => IntegerType
-      case _: java.lang.Double | _: Double   => DoubleType
-      case _: java.lang.Float | _: Float     => FloatType
-      case _: java.lang.Boolean | _: Boolean => BooleanType
-      case _: java.sql.Timestamp             => TimestampType
-      case _: java.time.Instant              => TimestampType
-      case _                                 => StringType
-    }
-    val schema = StructType(columns.map { c =>
-      val sample = rows.iterator.map(_.getOrElse(c, null)).find(_ != null).orNull
-      StructField(c, typeOf(sample), nullable = true)
-    })
-    val data = rows.map(m => Row.fromSeq(columns.map(c => m.getOrElse(c, null))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(data.toList), schema)
+    val schema = MemoryOnlineStore.schemaOf(s.tableName)
+    KvStore.toDf(spark, schema, rows, schema.fieldNames.toSeq.sorted)
   }
 
   /** Encode a subset of `df`'s columns as one Kafka payload column.

@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Causal {
 
-  private def floorDivExpr(s: String, c: String): String =
-    s"case when $s >= 0 then $s div $c else -((-($s)) div $c) end"
-
   /** Stratified average treatment effect — the classic adjustment for a
     * DISCRETE confounder: within each stratum compare treated vs
     * control means, then weight the per-stratum gaps by stratum size.
@@ -66,7 +63,7 @@ object Causal {
           .cast("decimal(38,0)")).as("sc"))
       .withColumn("diff", expr(
         s"""case when nt > 0 and nc > 0 then
-            (${floorDivExpr("st", "nt")}) - (${floorDivExpr("sc", "nc")})
+            st div nt - sc div nc
             end"""))
     strata.agg(
         count(lit(1)).as("n_strata"),
@@ -83,11 +80,10 @@ object Causal {
       .select(col("n_strata"), col("n_strata_used"), col("n"),
         col("n_used"), col("n_treat"), col("n_control"),
         expr(s"""case when n_treat > 0 and n_control > 0 then
-            (${floorDivExpr("stt", "n_treat")})
-            - (${floorDivExpr("sct", "n_control")}) end""")
+            stt div n_treat - sct div n_control end""")
           .as("naive_diff_micro"),
         expr(s"""case when n_used > 0 then
-            cast(${floorDivExpr("wsum", "n_used")} as long) end""")
+            cast(wsum div n_used as long) end""")
           .as("ate_micro"))
   }
 
@@ -133,7 +129,7 @@ object Causal {
           .otherwise(0L).cast("decimal(38,0)")).as(sName))
     } yield c
     def mean(tag: String): String =
-      s"case when n_$tag > 0 then ${floorDivExpr(s"s_$tag", s"n_$tag")} end"
+      s"case when n_$tag > 0 then s_$tag div n_$tag end"
     base.agg(aggs.head, aggs.tail: _*)
       .select(col("n_t0"), col("n_t1"), col("n_c0"), col("n_c1"),
         expr(mean("t0")).as("mean_t0_micro"),
@@ -312,9 +308,7 @@ object Causal {
     val (na, nb) = (g(0).getLong(1), g(1).getLong(1))
     val (sa, sb) = (dec(0, 2), dec(1, 2))
     val (qa, qb) = (dec(0, 3), dec(1, 3))
-    def floorDiv(s: BigInt, c: Long): Long =
-      (if (s >= 0) s / c else -((-s) / c)).toLong
-    val (meanA, meanB) = (floorDiv(sa, na), floorDiv(sb, nb))
+    val (meanA, meanB) = ((sa / na).toLong, (sb / nb).toLong)
     val (tMilli, dfMilli): (Option[Long], Option[Long]) =
       if (na < 2 || nb < 2) (None, None)
       else {
@@ -652,9 +646,7 @@ object Causal {
     val (na, nb) = (g(0).getLong(1), g(1).getLong(1))
     val (sa, sb) = (dec(0, 2), dec(1, 2))
     val (qa, qb) = (dec(0, 3), dec(1, 3))
-    def floorDiv(s: BigInt, c: Long): Long =
-      (if (s >= 0) s / c else -((-s) / c)).toLong
-    val (meanA, meanB) = (floorDiv(sa, na), floorDiv(sb, nb))
+    val (meanA, meanB) = ((sa / na).toLong, (sb / nb).toLong)
     val (dMilli, gMilli): (Option[Long], Option[Long]) =
       if (na < 2 || nb < 2) (None, None)
       else {
@@ -736,9 +728,7 @@ object Causal {
     val (na, nb) = (g(0).getLong(1), g(1).getLong(1))
     val (sa, sb) = (dec(0, 2), dec(1, 2))
     val (qa, qb) = (dec(0, 3), dec(1, 3))
-    def floorDiv(s: BigInt, c: Long): Long =
-      (if (s >= 0) s / c else -((-s) / c)).toLong
-    val diffMicro = floorDiv(sa, na) - floorDiv(sb, nb)
+    val diffMicro = (sa / na).toLong - (sb / nb).toLong
     val zs: Option[(Long, Long)] =
       if (na < 2 || nb < 2) None
       else {
@@ -903,9 +893,9 @@ object Causal {
           end as long)"""))
       .select(col("__s").as("stratum"), col("a_n").as("n_a"),
         col("b_n").as("n_b"),
-        expr(s"cast(${floorDivExpr("a_s", "a_n")} as long)")
+        expr("cast(a_s div a_n as long)")
           .as("mean_a_micro"),
-        expr(s"cast(${floorDivExpr("b_s", "b_n")} as long)")
+        expr("cast(b_s div b_n as long)")
           .as("mean_b_micro"),
         col("smd_milli"),
         when(col("smd_milli").isNull, lit(null).cast("boolean"))

@@ -563,8 +563,7 @@ object Cluster {
         col("s_a").cast("long").as("s_a"),
         col("s_b").cast("long").as("s_b"),
         when(col("__den") > 0,
-          expr("""case when __num >= 0 then 1000 * __num div __den
-                  else -(1000 * (-__num) div __den) end""").cast("long"))
+          expr("1000 * __num div __den").cast("long"))
           .as("ari_milli"))
   }
 
@@ -699,9 +698,7 @@ object Cluster {
       .agg(count(lit(1)).as("n_points"),
         sum("s_milli").as("__sum"),
         count(when(col("s_milli") < 0, 1)).as("n_negative"))
-      .withColumn("mean_silhouette_milli", expr(
-        """case when __sum >= 0 then __sum div n_points
-           else -((-__sum) div n_points) end"""))
+      .withColumn("mean_silhouette_milli", expr("__sum div n_points"))
       .select("cluster", "n_points", "mean_silhouette_milli", "n_negative")
   }
 

@@ -102,7 +102,7 @@ object Dedup {
     * warm vs ~5 s, the prefix variant's per-doc array build dominates);
     * pick the PREFIX variant on anything Zipfian — real crawl text — where
     * its rarity-ordered prefix prunes hot-shingle buckets 8-10× (12.6 s
-    * vs 103.7 s on the 4× boilerplate-skewed ScaleCheck corpus). Default
+    * vs 103.7 s on a 4× boilerplate-skewed corpus, round 8). Default
     * to the prefix variant when the distribution is unknown: its worst
     * case is ~2× this one's best, while this one's worst case is
     * unbounded bucket blowup capped only by `maxDf` recall loss.
@@ -215,8 +215,8 @@ object Dedup {
     * Measured trade (cold JVMs, sf0.1): on the synthetic corpus — near
     * UNIFORM shingle document frequencies — the plain inverted index has
     * no hot buckets and wins (warm ~2.6 s vs ~5 s; the per-doc sort +
-    * array verify dominate). On a ZIPFIAN corpus (ScaleCheck
-    * `jaccard_prefix`: 4× sf0.1 = 240k docs, four boilerplate phrases
+    * array verify dominate). On a ZIPFIAN corpus (a round-8 fixture:
+    * 4× sf0.1 = 240k docs, four boilerplate phrases
     * appended so a few shingles reach df ≈ 60k, no df cap) the prefix
     * variant is **8–10× faster** (two runs: 12.6 s vs 103.7 s, 15.8 s vs
     * 155.1 s; round-8 re-measure with int64-hashed shingles on the

@@ -264,11 +264,8 @@ object Eval {
              div (cast(n as decimal(38,0)) * n) as long)""")
           .as("pe_micro"),
         expr("""case when cast(n as decimal(38,0)) * n - __s > 0 then
-             cast(case when cast(n_agree as decimal(38,0)) * n - __s >= 0
-               then (cast(n_agree as decimal(38,0)) * n - __s) * 1000000
-                 div (cast(n as decimal(38,0)) * n - __s)
-               else -((__s - cast(n_agree as decimal(38,0)) * n) * 1000000
-                 div (cast(n as decimal(38,0)) * n - __s)) end as long)
+             cast((cast(n_agree as decimal(38,0)) * n - __s) * 1000000
+               div (cast(n as decimal(38,0)) * n - __s) as long)
              end""").as("kappa_micro"))
   }
 
@@ -335,9 +332,7 @@ object Eval {
         expr("""cast(__e * 1000000 div (cast(n as decimal(38,0)) * n)
              as long)""").as("exp_mean_w_micro"),
         expr("""case when __e > 0 then
-             cast(case when __e - __o * n >= 0
-               then (__e - __o * n) * 1000000 div __e
-               else -((__o * n - __e) * 1000000 div __e) end as long)
+             cast((__e - __o * n) * 1000000 div __e as long)
              end""").as("kappa_w_micro"))
   }
 
@@ -1345,10 +1340,7 @@ object Eval {
       .agg(max(col("t_y")).as("label"),
         count(lit(1)).as("n_val"),
         sum(col("s_micro")).as("shapley_sum_micro"))
-      .withColumn("shapley_micro", expr(
-        """case when shapley_sum_micro >= 0
-             then shapley_sum_micro div n_val
-             else -((-shapley_sum_micro) div n_val) end"""))
+      .withColumn("shapley_micro", expr("shapley_sum_micro div n_val"))
   }
 
   /** Cumulative gains / lift curve — the targeting-quality view of a
@@ -1659,15 +1651,13 @@ object Eval {
         sum(expr("cast(__w as decimal(38,0)) * __vm")).as("s"))
       .collect()
     require(reps.nonEmpty, "bootstrapMeanCI: empty input")
-    def floorDiv(s: BigInt, c: BigInt): Long =
-      (if (s >= 0) s / c else -((-s) / c)).toLong
     val n = reps(0).getAs[Long]("cf")
     val sTot = BigInt(reps(0).getAs[java.math.BigDecimal]("sf").toBigInteger)
     val means = reps.toSeq
       .map(r => (BigInt(r.getAs[java.math.BigDecimal]("s").toBigInteger),
         r.getAs[Long]("c")))
       .filter(_._2 > 0)
-      .map { case (s, c) => floorDiv(s, BigInt(c)) }
+      .map { case (s, c) => (s / c).toLong }
       .sorted
     val bEff = means.size.toLong
     val lo = (25 * bEff + 999) / 1000
@@ -1685,7 +1675,7 @@ object Eval {
       }
     val spark = df.sparkSession
     import spark.implicits._
-    Seq((n, bEff, floorDiv(sTot, BigInt(n)), at(lo), at(hi), se))
+    Seq((n, bEff, (sTot / n).toLong, at(lo), at(hi), se))
       .toDF("n", "b_effective", "mean_micro", "boot_lo_micro",
         "boot_hi_micro", "boot_se_micro")
   }
@@ -1784,12 +1774,10 @@ object Eval {
         sum(col("__v").cast("decimal(38,0)")).as("__s"))
     val tot = g.agg(sum("n_g").as("__nt"),
       sum("__s").cast("decimal(38,0)").as("__st"))
-    def fd(s: String, c: String): String =
-      s"case when $s >= 0 then $s div $c else -((-($s)) div $c) end"
     g.crossJoin(broadcast(tot))
-      .withColumn("mean_micro", expr(fd("__st", "__nt")))
+      .withColumn("mean_micro", expr("__st div __nt"))
       .withColumn("mean_excl_micro", expr(
-        s"case when __nt > n_g then ${fd("(__st - __s)", "(__nt - n_g)")} end"))
+        "case when __nt > n_g then (__st - __s) div (__nt - n_g) end"))
       .withColumn("influence_micro",
         col("mean_micro") - col("mean_excl_micro"))
       .select("group", "n_g", "mean_micro", "mean_excl_micro",
@@ -1878,9 +1866,7 @@ object Eval {
           nExtreme += 1
       }
     }
-    def floorDiv(s: BigInt, c: BigInt): Long =
-      (if (s >= 0) s / c else -((-s) / c)).toLong
-    val diff = floorDiv(sa, BigInt(ca)) - floorDiv(sb, BigInt(cb))
+    val diff = (sa / ca).toLong - (sb / cb).toLong
     val p = (BigInt(1 + nExtreme) * 1000000 / BigInt(1 + bEff)).toLong
     val spark = df.sparkSession
     import spark.implicits._
@@ -2003,9 +1989,7 @@ object Eval {
         sum(when(col("__ok"), 1L).otherwise(0L)).as("b_effective"),
         sum(when(col("__ext"), 1L).otherwise(0L)).as("n_extreme"))
       .select(col("__seg").as("segment"), col("n_a"), col("n_b"),
-        (expr("CASE WHEN __sa >= 0 THEN __sa div n_a ELSE -((-__sa) div n_a) END") -
-          expr("CASE WHEN __sb >= 0 THEN __sb div n_b ELSE -((-__sb) div n_b) END"))
-          .as("diff_micro"),
+        expr("__sa div n_a - __sb div n_b").as("diff_micro"),
         col("b_effective"), col("n_extreme"),
         expr("(1 + n_extreme) * 1000000 div (1 + b_effective)")
           .as("p_micro"))
@@ -2272,11 +2256,8 @@ object Eval {
         expr("cast(case when n_items > 0 then " +
           "__b * 1000000 div (__nn * __nn) end as long)").as("p_e_micro"),
         expr("""cast(case when __nn * __nn - __b > 0 then
-             case when (__s1 - __nn) * (__nn * __nn) - __b * __d >= 0 then
-               ((__s1 - __nn) * (__nn * __nn) - __b * __d) * 1000000
-                 div (__d * (__nn * __nn - __b))
-             else -((__b * __d - (__s1 - __nn) * (__nn * __nn)) * 1000000
-                 div (__d * (__nn * __nn - __b))) end
+             ((__s1 - __nn) * (__nn * __nn) - __b * __d) * 1000000
+               div (__d * (__nn * __nn - __b))
              end as long)""").as("kappa_micro"))
   }
 

@@ -91,17 +91,12 @@ object Features {
     val perCat = base.groupBy("category")
       .agg(count(lit(1)).as("n"), sum("tm").as("sum_micro"))
     val prior = perCat.agg(
-      expr("""case when sum(sum_micro) >= 0
-              then sum(sum_micro) div sum(n)
-              else -((-sum(sum_micro)) div sum(n)) end""").as("prior_micro"))
+      expr("sum(sum_micro) div sum(n)").as("prior_micro"))
     base.join(perCat, "category")
       .crossJoin(broadcast(prior))
       .withColumn("enc_loo_micro", expr(
         s"""case when n - 1 + ${m}L = 0 then null
-            when sum_micro - tm + ${m}L * prior_micro >= 0
-            then (sum_micro - tm + ${m}L * prior_micro) div (n - 1 + ${m}L)
-            else -((-(sum_micro - tm + ${m}L * prior_micro))
-                   div (n - 1 + ${m}L)) end"""))
+            else (sum_micro - tm + ${m}L * prior_micro) div (n - 1 + ${m}L) end"""))
       .select(col("id"), col("category"), col("n"), col("enc_loo_micro"))
   }
 
@@ -736,13 +731,9 @@ object Features {
     val u2b = r2b - BigInt(nb) * (nb + 1)
     // directional rank-biserial (= Cliff's delta): 2U_A/(n_a·n_b) − 1,
     // positive ⇒ group A stochastically larger; with doubled U that is
-    // (u2a − n_a·n_b)/(n_a·n_b). Sign-split so only positive values
-    // divide (BigInt truncates toward zero, SQL // floors; on positives
-    // they agree)
+    // (u2a − n_a·n_b)/(n_a·n_b), truncated toward zero
     val rbNum = u2a - BigInt(na) * nb
-    val rbMicro =
-      if (rbNum >= 0) (rbNum * 1000000 / (BigInt(na) * nb)).toLong
-      else -((-rbNum) * 1000000 / (BigInt(na) * nb)).toLong
+    val rbMicro = (rbNum * 1000000 / (BigInt(na) * nb)).toLong
     val n = na + nb
     val tieD = new java.math.BigDecimal(ties.toBigInteger).doubleValue()
     val zMilli: Option[Long] =
@@ -952,8 +943,7 @@ object Features {
         sum(col("__v").cast("decimal(38,0)")).as("__s"),
         sum(expr("cast(__v as decimal(38,0)) * __v")).as("__q"))
       .select(col("grp"), col("n"),
-        expr("""cast(case when __s >= 0 then __s * 1000000 div n
-                else -((-(__s)) * 1000000 div n) end as long)""")
+        expr("cast(__s * 1000000 div n as long)")
           .as("mean_micro"),
         expr("""cast(case when n >= 2 and __s > 0 then
             (n * __q - __s * __s) * 1000000 div ((n - 1) * __s)
@@ -1222,8 +1212,6 @@ object Features {
     val p = Ranks.prefixSum(cnt, Seq(col("__vm")), Seq("__c"))
     val tot = cnt.agg(sum("__c").as("__n"),
       sum(expr("cast(__vm as decimal(38,0)) * __c")).as("__s"))
-    def fd(s: String, c: String): String =
-      s"case when $s >= 0 then $s div $c else -((-($s)) div $c) end"
     p.crossJoin(broadcast(tot))
       .withColumn("__k", expr(s"__n * $trimPpm div 1000000"))
       .withColumn("__used", expr(
@@ -1240,15 +1228,13 @@ object Features {
           "case when __c_cum - __c + 1 <= __n - __k and __n - __k <= " +
             "__c_cum then __vm end")).as("hi_cap_micro"))
       .select(col("n"), col("trim_k"),
-        expr(fd("s", "n")).as("mean_micro"),
-        expr(s"""case when n - 2 * trim_k > 0 then
-            ${fd("strim", "(n - 2 * trim_k)")} end""")
+        expr("s div n").as("mean_micro"),
+        expr("case when n - 2 * trim_k > 0 then strim div (n - 2 * trim_k) end")
           .as("trimmed_mean_micro"),
-        expr(s"""case when n - 2 * trim_k > 0 then
-            ${fd(
-              "(strim + cast(trim_k as decimal(38,0)) * lo_cap_micro" +
-                " + cast(trim_k as decimal(38,0)) * hi_cap_micro)",
-              "n")} end""").as("winsorized_mean_micro"),
+        expr("""case when n - 2 * trim_k > 0 then
+            (strim + cast(trim_k as decimal(38,0)) * lo_cap_micro
+              + cast(trim_k as decimal(38,0)) * hi_cap_micro) div n end""")
+          .as("winsorized_mean_micro"),
         col("lo_cap_micro"), col("hi_cap_micro"))
   }
 
@@ -2458,10 +2444,8 @@ object Features {
         s"""(cast(n as $dec) * sxx - sx * sx) +
            (cast(n as $dec) * syy - sy * sy) + (sx - sy) * (sx - sy)"""))
       .select(col("n"),
-        expr("""cast(case when __den > 0 then
-            case when __num >= 0 then (__num * 1000000) div __den
-              else -((-(__num) * 1000000) div __den) end
-          end as long)""").as("ccc_micro"),
+        expr("cast(case when __den > 0 then __num * 1000000 div __den end as long)")
+          .as("ccc_micro"),
         expr(s"""cast(case when n > 1
             and cast(n as $dec) * sxx - sx * sx > 0
             and cast(n as $dec) * syy - sy * sy > 0 then

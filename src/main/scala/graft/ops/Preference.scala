@@ -58,8 +58,7 @@ object Preference {
       .groupBy("__r", "__i")
       .agg(count(lit(1)).as("__c"),
         sum(col("__v").cast("decimal(38,0)")).as("__s"))
-      .withColumn("__m", expr(
-        "case when __s >= 0 then __s div __c else -((-__s) div __c) end"))
+      .withColumn("__m", expr("__s div __c"))
       .select("__r", "__i", "__m")
       .localCheckpoint()
 

@@ -1034,12 +1034,10 @@ object Similarity {
       .localCheckpoint()
     val global = cells.groupBy(col("dim"))
       .agg(sum("n").as("gn"), sum("s").as("gs"))
-      .withColumn("g", expr(
-        "case when gs >= 0 then gs div gn else -((-gs) div gn) end"))
+      .withColumn("g", expr("gs div gn"))
       .select(col("dim"), col("g"))
     val comps = cells
-      .withColumn("m", expr(
-        "case when s >= 0 then s div n else -((-s) div n) end"))
+      .withColumn("m", expr("s div n"))
       .join(broadcast(global), "dim")
     comps.groupBy(col("label"))
       .agg(max(col("n")).as("n"),
@@ -1162,10 +1160,7 @@ object Similarity {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = df.sparkSession
     val dec = "decimal(38,0)"
-    // BigInt `/` truncates toward zero — exactly the sign-split
-    // `case when s >= 0 then s div c else -((-s) div c) end` tree the
-    // distributed formulation (and the oracle) uses.
-    def fdb(s: BigInt, c: BigInt): BigInt = s / c
+    // BigInt `/` truncates toward zero, like SQL `div`
     val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .select(col(vecCol).as("__vec"))
     val outSchema = StructType(Seq(
@@ -1201,7 +1196,7 @@ object Similarity {
     val mean: IndexedSeq[Option[Long]] = (0 until dims).map { d =>
       val i = statRow.fieldIndex(s"s_$d")
       if (statRow.isNullAt(i)) None
-      else Some(fdb(BigInt(statRow.getDecimal(i).toBigInteger), BigInt(n(d))).toLong)
+      else Some((BigInt(statRow.getDecimal(i).toBigInteger) / n(d)).toLong)
     }
     var v: IndexedSeq[Option[Long]] = IndexedSeq.fill(dims)(Some(1000000L))
     var score = 0L
@@ -1224,9 +1219,7 @@ object Similarity {
       val withDot = base
         .withColumn("__dot",
           aggregate(dotArr, lit(0).cast(dec), (acc, t) => (acc + t).cast(dec)))
-        .withColumn("__dotmu", expr(
-          s"cast(case when __dot >= 0 then __dot div 1000000 " +
-            s"else -((-__dot) div 1000000) end as long)"))
+        .withColumn("__dotmu", expr("cast(__dot div 1000000 as long)"))
       // pass: dim-wise Gram sums Σᵢ x̃_id·dot_i, map-side-combined into
       // one row
       val wExprs = (0 until dims).map { d =>
@@ -1240,8 +1233,7 @@ object Similarity {
       val wmu: IndexedSeq[Option[Long]] = (0 until dims).map { d =>
         val i = wRow.fieldIndex(s"w_$d")
         if (wRow.isNullAt(i)) None
-        else Some(fdb(BigInt(wRow.getDecimal(i).toBigInteger),
-          BigInt(1000000L)).toLong)
+        else Some((BigInt(wRow.getDecimal(i).toBigInteger) / 1000000L).toLong)
       }
       val qTerms = wmu.flatten.map(x => BigInt(x) * BigInt(x))
       val norm =
@@ -1253,7 +1245,7 @@ object Similarity {
       v =
         if (norm <= 0) IndexedSeq.fill(dims)(Some(0L))
         else wmu.map(_.map(wm =>
-          fdb(BigInt(wm) * BigInt(1000000L), BigInt(norm)).toLong))
+          (BigInt(wm) * 1000000L / norm).toLong))
     }
     // deterministic sign: the largest-|v| component (tie → lowest dim)
     // points non-negative

@@ -919,9 +919,7 @@ object TimeSeries {
         floor(col(valueCol).cast("double") * 1e6).cast("long").as("__vm"))
       .withColumn("__s", sum(col("__vm").cast(dec)).over(w))
       .withColumn("__t", count(lit(1)).over(w))
-      .withColumn("__mean", expr(
-        """case when __s >= 0 then __s div __t
-           else -((-__s) div __t) end"""))
+      .withColumn("__mean", expr("__s div __t"))
       .withColumn("__term",
         expr(s"cast(__vm as $dec) - __mean - $deltaMicro"))
       .withColumn("__m", sum(col("__term")).over(w))
@@ -1009,10 +1007,8 @@ object TimeSeries {
       .withColumn("__t", expr("__q - __sq"))
       .withColumn("__num", expr("__w - __sq"))
       .select(col("__k").as("key"), col("n_buckets"), col("n_phases"),
-        expr("""cast(case when __t > 0 then
-            case when __num >= 0 then __num * 1000000 div __t
-            else -((-__num) * 1000000 div __t) end
-          end as long)""").as("strength_micro"))
+        expr("cast(case when __t > 0 then __num * 1000000 div __t end as long)")
+          .as("strength_micro"))
   }
 
   /** Seasonal (Hirsch–Slack) Mann–Kendall per key — the trend test

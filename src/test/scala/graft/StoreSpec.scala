@@ -506,6 +506,51 @@ class StoreSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("memory store reads VECTOR, MAP and BYTES back with the schema they were written with") {
+    val spark2 = spark
+    import spark2.implicits._
+    val cl = new GraftClient(spark)
+    val data = Seq(
+      (1L, Seq(1L, 2L), Map("a" -> 1L), Array[Byte](1, 2), 10L),
+      (2L, Seq(3L), Map("b" -> 2L, "c" -> 3L), Array[Byte](3), 20L))
+      .toDF("id", "vec", "m", "blob", "t_ms")
+    cl.materialize(
+      DataFrameSource("mst_src", data, keys = Some(Seq("id")),
+        timestampField = Some("t_ms"), timestampFormat = "epoch_millis"),
+      MemoryStoreSink("mst_tbl"))
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.orderBy("id").select(cols.map(col): _*).collect().map(r =>
+        r.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v }).toSeq
+    val expected = rows(data, "id", "vec", "m", "blob")
+    val types = Seq("vec", "m", "blob").map(c => data.schema(c).dataType)
+
+    val read = cl.getFeatures(MemoryStoreSource("mst_read", "mst_tbl", keys = Some(Seq("id"))))
+    assert(Seq("vec", "m", "blob").map(c => read.schema(c).dataType) == types)
+    assert(rows(read, "id", "vec", "m", "blob") == expected)
+
+    val served = cl.getOnlineFeatures(Seq(1L, 2L).toDF("id"), "mst_tbl", Seq("vec", "m", "blob"))
+    assert(Seq("vec", "m", "blob").map(c => served.schema(c).dataType) == types)
+    assert(rows(served, "id", "vec", "m", "blob") == expected)
+
+    val joined = cl.lookupJoin(Seq(1L, 2L).toDF("id"), "mst_tbl",
+      Seq("v" -> "vec", "mm" -> "m", "bb" -> "blob"))
+    assert(Seq("v", "mm", "bb").map(c => joined.schema(c).dataType) == types)
+    assert(rows(joined, "id", "v", "mm", "bb") == expected)
+  }
+
+  test("materialize into a MemoryStoreSink with a range needs a timestamp field") {
+    val spark2 = spark
+    import spark2.implicits._
+    val cl = new GraftClient(spark)
+    val src = DataFrameSource("mst_untimed", Seq((1L, 5L)).toDF("id", "v"), keys = Some(Seq("id")))
+    val e = intercept[IllegalArgumentException](
+      cl.materialize(src, MemoryStoreSink("mst_untimed_tbl"), startMillis = Some(0L)))
+    assert(e.getMessage.contains("missing timestamp_field"))
+    // without a range the untimed rows upsert at t = 0
+    cl.materialize(src, MemoryStoreSink("mst_untimed_tbl"))
+    assert(MemoryOnlineStore.get("mst_untimed_tbl", Map("id" -> 1L)).flatMap(_.get("v")).contains(5L))
+  }
+
   test("materializeStream writes each micro-batch into a RedisSink over RESP") {
     val spark2 = spark
     import spark2.implicits._

@@ -1,6 +1,7 @@
 package graft
 
 import graft.client.GraftClient
+import graft.engine.EventTime
 import graft.streaming._
 import graft.table._
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
@@ -11,11 +12,11 @@ import scala.collection.mutable
 import scala.concurrent.duration._
 import scala.util.Random
 
-/** Restart equivalence for the watermark-finalized keyed twins and the
-  * sliding-window operator: a query stopped after k of n micro-batches and
-  * started again on the same source and checkpoint must emit, in total,
-  * exactly the rows of an uninterrupted run — the exactly-once contract of
-  * Structured Streaming. Every fixture is fed in event-time order so no
+/** Restart equivalence for the watermark-finalized keyed twins, the
+  * temporal join and the sliding-window operator: a query stopped after k
+  * of n micro-batches and started again on the same source and checkpoint
+  * must emit, in total, exactly the rows of an uninterrupted run — the
+  * exactly-once contract of Structured Streaming. Every fixture is fed in event-time order so no
   * row is late (the twins' are their parity fixtures), with the cut placed
   * where the key state already holds finalized history: an operator that
   * kept any of it outside its checkpointed state would diverge after the
@@ -178,6 +179,23 @@ class StreamingRestartSpec extends SparkSuite {
         Seq((9L, "watermark push two", 14400000L))), stopAfter = 1) { df =>
         StreamingLsh.candidatePairs(withTs(df, "doc_id", "text", "t_ms"),
           "doc_id", "text", "ts", lateness = 1.second, horizon = 1.hour)
+      }
+    }),
+    "temporal join" -> (() => {
+      // both sides come from one stream of side-tagged rows, so no
+      // micro-batch can start between the left and right rows of a batch;
+      // the cut falls after right version ("a", 20) at 3000, which the
+      // later left row ("a", 4000) must join from the restored state
+      check(Seq(
+        Seq(("R", "a", 10L, 1000L), ("R", "b", 5L, 1200L), ("L", "a", 0L, 1500L)),
+        Seq(("R", "a", 20L, 3000L), ("L", "b", 0L, 2500L)),
+        Seq(("L", "a", 0L, 4000L), ("L", "b", 0L, 4500L), ("R", "b", 7L, 5000L)),
+        Seq(("L", "zz", 0L, 100 * h))), stopAfter = 2) { df =>
+        val rows = df.toDF("side", "k", "v", "t_ms").withColumn(EventTime.Col, col("t_ms"))
+        StreamingTemporalJoin(
+          rows.filter(col("side") === "L").select("k", "t_ms", EventTime.Col),
+          rows.filter(col("side") === "R").select("k", "v", EventTime.Col),
+          Seq("k"), Seq("v" -> "jv"), maxOutOfOrdernessMs = 0L)
       }
     }),
     "over windows" -> (() => {

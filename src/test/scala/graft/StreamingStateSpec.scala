@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions.{col, timestamp_millis}
 import scala.concurrent.duration._
 
 /** Measured state-size scaling for the stateful streaming twins — the
-  * streaming analogue of graft.ScaleCheck's 1×-vs-8× throughput ratios.
+  * streaming analogue of the batch 1×-vs-8× wall ratios of
+  * `JobProf --scale 8`.
   * Each test feeds a twin the same workload at 1× and 8× and reads the
   * engine's own state metrics (`stateOperators.numRowsTotal` = state
   * store rows ≈ live group keys; `memoryUsedBytes` = loaded state size,

@@ -9,8 +9,13 @@ directories that already hold a checkout. Pair i runs
 `perfbench/run.py --workload WORKLOAD --seed K+i --seconds S` in both trees
 with the same seed, the parent first on even pairs and the change first on
 odd ones. It prints each pair's end-to-end metrics (the `end_to_end` list of
-BENCHMARK.json), then each side's median and quartiles and how many pairs
-the change won. Exported trees, their builds and the logs go to the
+BENCHMARK.json), then each side's median and quartiles, how many pairs the
+change won, and two verdicts per metric: `gain` (the change wins at least 9
+in 10 pairs and its median beats the parent's by more than the parent's
+interquartile spread) and `bound` (the change's median is no worse than the
+parent's by more than the metric's BENCHMARK.json `bound`; `unresolved` when
+the parent's spread is wider than the bound, unless every change run beats
+every parent run). Exported trees, their builds and the logs go to the
 scratch directory (`--work`, default a fresh temporary directory), where a
 tree already exported for the same commit is reused with its build; each
 run's stderr goes to `<side>-<seed>.log` and its stdout, with the detail
@@ -80,6 +85,36 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def wins(parent, change, better):
+    """Pairs in which the change beat the parent."""
+    sign = -1 if better == "lower" else 1
+    return sum(sign * (c - p) > 0 for p, c in zip(parent, change))
+
+
+def gain(parent, change, better):
+    """The gain rule: the change wins at least 9 in 10 pairs, and its median
+    is better than the parent's by more than the parent's interquartile
+    spread."""
+    pq, cq = quartiles(parent), quartiles(change)
+    gap = (pq[1] - cq[1]) if better == "lower" else (cq[1] - pq[1])
+    return 10 * wins(parent, change, better) >= 9 * len(parent) and gap > pq[2] - pq[0]
+
+
+def bound_check(parent, change, better, bound):
+    """The bound check: "ok" when the change's median is worse than the
+    parent's by at most `bound` (a fraction of the parent's median), else
+    "worse"; "unresolved" when the parent's interquartile spread is wider
+    than the bound, unless every change run beats every parent run."""
+    sign = -1 if better == "lower" else 1
+    if all(sign * (c - p) > 0 for p in parent for c in change):
+        return "ok"
+    pq, cq = quartiles(parent), quartiles(change)
+    if pq[2] - pq[0] > bound * abs(pq[1]):
+        return "unresolved"
+    worse = sign * (pq[1] - cq[1])
+    return "ok" if worse <= bound * abs(pq[1]) else "worse"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("parent", help="git rev or checkout directory of the parent")
@@ -100,7 +135,9 @@ def main():
     for tree in trees.values():
         check_path_length(tree)
     with open(os.path.join(trees["change"], "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        e2e = json.load(f)["end_to_end"]
+    better = {m["name"]: m["better"] for m in e2e}
+    bounds = {m["name"]: m["bound"] for m in e2e}
     names = list(better)
     res = {"parent": [], "change": []}
     print("pair seed first  " + "  ".join(f"{n:>19}" for n in names) + "  failed(p/c)")
@@ -120,13 +157,13 @@ def main():
     for n in names:
         p = [r[n] for r in res["parent"]]
         c = [r[n] for r in res["change"]]
-        sign = -1 if better[n] == "lower" else 1
-        wins = sum(sign * (y - x) > 0 for x, y in zip(p, c))
         pq, cq = quartiles(p), quartiles(c)
         delta = (cq[1] - pq[1]) / pq[1] if pq[1] else float("nan")
         print(f"  {n:<8} parent {pq[0]:.4g} / {pq[1]:.4g} / {pq[2]:.4g}"
               f"   change {cq[0]:.4g} / {cq[1]:.4g} / {cq[2]:.4g}"
-              f"   median {delta:+.1%}   change wins {wins}/{a.pairs}")
+              f"   median {delta:+.1%}   change wins {wins(p, c, better[n])}/{a.pairs}"
+              f"   gain {'yes' if gain(p, c, better[n]) else 'no'}"
+              f"   bound {bounds[n]:.0%} {bound_check(p, c, better[n], bounds[n])}")
     print(f"logs in {work}")
 
 
