@@ -1,538 +1,117 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Benchmark main: runs every inventory query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Results are forced with a noop-format write so the
-  * full plan (including projections a count() would prune) executes.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The suite timer: two full timed passes over every inventory query on
+  * SPARK_GRAFT_SF_DIR, under [[SparkEnv.session]], with [[JobProf]]'s
+  * warm-up and per-query timer (cache cleared, result forced by a noop
+  * write). A query's time is the minimum of its two passes; a query that
+  * throws is listed under `failed` and left out of every total.
   *
-  * ==Noise self-adjudication==
-  * Shared-host CPU and writeback-congestion episodes were observed to
-  * inflate individual queries 10-60x run-to-run with identical code and
-  * data — long enough to defeat a min-of-N on its own. FOUR rounds of
-  * judge adjudication (q16/r5, q33/r7, q178/r9, seven outliers/r10)
-  * re-ran outliers by hand; this bench now proves its own weather
-  * instead, with four independent contention signals:
+  * A CPU probe runs before pass 1 and after each pass. `probe_ratio` is
+  * the median of those probe times over the `probe_median_ms` of a prior
+  * artifact (`SPARK_GRAFT_BENCH_PRIOR`, default `bench_prior.json`; null
+  * when it cannot be read): near 1 the host was as quiet as when the prior
+  * was recorded, so the two runs' times compare.
   *
-  *  1. '''CPU calibration probes''': a fixed CPU-throughput-bound probe
-  *     (~1.5e9 codegen'd long ops across all cores — a deliberate
-  *     full-core squeeze inflates it ~5x, measured; an earlier
-  *     latency-bound cut sat flat under the same squeeze) runs
-  *     every [[ProbeEveryN]] queries and once more at the end. All probe
-  *     times land in the artifact as `noise_probe_ms`. The hot threshold
-  *     is [[HotProbeFactor]]x the median of ALL pass-1 probes of the
-  *     same flavor — robust even when an episode spans JVM startup,
-  *     where a startup-only calibration would be poisoned. A hot probe
-  *     marks the query block it brackets CONTENDED.
-  *  2. '''I/O calibration probes''' (sentinel v2 — the r10 blind spot):
-  *     a small parquet write + read-back (32 files, compression-hostile
-  *     values) runs alongside every CPU probe and lands in the artifact
-  *     as `io_probe_ms`. The r10 driver pass carried seven 3-22x
-  *     outliers the CPU probe sailed under because the episode was
-  *     writeback/page-cache pressure, not CPU — an I/O-bound probe is
-  *     the signal that sees those. Same per-flavor 3x-median threshold.
-  *     Both flavors' hot baselines are `min(this run's median, the
-  *     committed artifact's quiet-weather median)` — an episode spanning
-  *     an ENTIRE short run (startup calibration included) inflates the
-  *     run's own median so 3x-own-median never trips, but it cannot
-  *     inflate last round's committed number (the dd scenario in
-  *     tools/stress_bench.sh proves exactly this case).
-  *  3. '''Min-of-N spread''': consecutive runs of IDENTICAL code that
-  *     disagree >2x after the sampling budget is exhausted mark that
-  *     query SUSPECT — this is per-query, so an episode short enough to
-  *     dodge every probe still gets caught by the query it actually hit.
-  *  4. '''Committed-prior ratchet''' (sentinel v2): the previous
-  *     committed artifact's per-query times (`bench_prior.json`, env
-  *     `SPARK_GRAFT_BENCH_PRIOR`) load at startup; identical code cannot
-  *     honestly slow 3x, so any query measuring >3x its prior (and
-  *     >0.6s absolute) is requeued even when every probe stayed quiet —
-  *     this is the STEADY-contention detector the spread signal cannot
-  *     be (consecutive runs under steady squeeze agree at the inflated
-  *     time; r10's q228 measured 48.3s twice against a 3.7s fresh-JVM
-  *     truth and was flagged by nothing). The REQUEUE trigger is
-  *     tiered (r11 blind band: ten sub-second queries drifted
-  *     2.2-2.95x in two consecutive-execution clusters, under the flat
-  *     3x): queries with a sub-second prior requeue at a 2x ratio
-  *     normalized by the pass-1 median prior ratio (so an honestly
-  *     uniformly-slower run doesn't mass-requeue, while a clustered
-  *     episode riding on top of the run median still trips); larger
-  *     priors keep the flat 3x. FLAGGING stays at the hard 3x. A query
-  *     still >3x prior after requeue lands in `prior_exceeded` AND
-  *     `contended`. If the MEDIAN
-  *     accepted/prior ratio across all queries with a >=0.3s prior
-  *     exceeds 2x, the whole artifact is stamped
-  *     `"globally_contended":true` — identical code does not get
-  *     uniformly 2x slower; a synthetic everything-5x-slower run must
-  *     flag globally instead of accepting (tools/stress_bench.sh proves
-  *     both this and the dd-writeback case). Both the FLAG tier and the
-  *     global gate are AMBIENT-NORMALIZED (r13): per-query prior ratios
-  *     divide by `probe_ratio` — the CPU-probe-median ratio vs the
-  *     committed artifact, clamped to [1, [[AmbientRatioCap]]] — so
-  *     round-over-round machine drift (observed +6% r11→r12, in
-  *     lockstep between probes and queries on unchanged code) stops
-  *     eating gate headroom, while the cap keeps a real squeeze
-  *     flagging. The artifact embeds a `sentinel_audit` block (probe
-  *     ratios, per-tier requeue counts, requeue reasons, the
-  *     normalized-ratio histogram) that `tools/replay_sentinel.py
-  *     --verify` re-derives from the (prior, artifact) pair and diffs
-  *     field by field, so a judge adjudicates from the artifact alone.
-  *
-  * Every contended-window, suspect, or prior-exceeding query is
-  * automatically REQUEUED: re-measured at the end of the run, bracketed
-  * by its own probes. The accepted time is the minimum across passes; a
-  * query whose accepted measurement still overlapped a hot probe,
-  * unresolved spread, or its prior ratchet is flagged in the artifact's
-  * `"contended"` list so a reader knows that number is an upper bound on
-  * the engine's steady state, not a measurement of it.
-  *
-  * Queries whose first run exceeds [[RerunThresholdSec]] are run at least
-  * twice and the minimum reported (min-of-N measures steady state rather
-  * than transient noise inside an otherwise-quiet window).
+  * Writes `bench_full.json` (full query names, both pass times, the probe
+  * series) to the working directory and prints one JSON line.
   */
 object Bench {
-  // min-of-2 for everything but the trivial tail: sub-second queries were
-  // single-run and their ±0.3 s host noise dominated round-over-round
-  // comparisons (observed q01 0.85 vs 0.56 on identical code)
-  private val RerunThresholdSec = 0.3
-  // probe cadence: ~51 windows over 253 queries at ~0.3 s per probe —
-  // ~6% wall overhead, windows of ~5-10 s at sf0.1, so an episode long
-  // enough to matter (the adjudicated ones ran 10-125 s) is guaranteed to
-  // span a probe (a measured 16 s squeeze sat entirely inside a 29 s
-  // window at cadence 10 and was missed — and STEADY contention defeats
-  // the spread signal, because consecutive runs agree at the inflated
-  // time); shorter spikes are caught per-query by the min-of-N spread
-  private val ProbeEveryN = 5
-  // a probe 3x the run's median means the host was NOT quiet; quiet
-  // re-runs of the same probe sit within ~1.5x of each other
-  private val HotProbeFactor = 3.0
-  private val CalibrationProbes = 5
-  // committed-prior ratchet: identical code cannot honestly slow 3x;
-  // sub-0.6s measurements are never flagged (absolute noise floor)
-  private val PriorRatchetFactor = 3.0
-  private val PriorRatchetFloorSec = 0.6
-  // REQUEUE tier for sub-second priors (the r11 blind band): ten
-  // sub-second queries drifted 2.2-2.95x in two consecutive-execution
-  // clusters and sat under the flat 3x trigger. A requeue of a
-  // sub-second query costs under a second, and JIT/ambient noise
-  // concentrates exactly there — so requeue (not flag) at 2x. The
-  // per-query ratio is first normalized by the PASS-1 median prior
-  // ratio so a run that is honestly, uniformly ~1.3x slower does not
-  // mass-requeue its sub-second tail; a clustered local episode rides
-  // ON TOP of the run median and still trips.
-  private val SubSecondPriorSec = 1.0
-  private val SubSecondRequeueFactor = 2.0
-  private val SubSecondRequeueFloorSec = 0.25
-  // REQUEUE tier for HEAVY priors (round 15; the r14 driver episode):
-  // five multi-second queries sat at 2.2-2.8x under localized co-tenant
-  // heat — under the flat 3x trigger yet far over the driver's 2x
-  // global gate, so one noisy window could turn a driver-read artifact
-  // red with zero code change. A requeue of a multi-second query costs
-  // seconds and protects the hard gate, so requeue (not flag) when a
-  // >=2s prior reads over a normalized 1.5x; the 2-3x histogram band is
-  // structurally unreachable for heavy priors in an accepted artifact
-  // unless pass 2 ALSO read hot (then it's flagged contended anyway).
-  // Priors in [1,2)s keep the flat 3x ratchet: their absolute excess is
-  // bounded (<3s) and each extra requeue costs more than it protects.
-  private val HeavyPriorSec = 2.0
-  private val HeavyRequeueFactor = 1.5
-  // median accepted/prior ratio above this stamps the whole artifact
-  // globally_contended (priors below 0.3s are too noisy to vote)
-  private val GlobalRatioLimit = 2.0
-  private val GlobalRatioMinPriorSec = 0.3
-  // Ratio-vote noise floor (round-14): a query where BOTH the prior and
-  // the measurement sit under this bound carries a ≤0.15s absolute
-  // delta — pure scheduler/JIT noise at this granularity — yet a 0.20s
-  // -> 0.32s wobble reads as a 1.6x "regression" in the histogram and
-  // the median votes. Such pairs are excluded from the ratio votes and
-  // the sentinel histogram (r13 seal: six 1.25-2x histogram entries,
-  // every one a sub-0.35s pair). Requeue/flag tiers are untouched —
-  // they have their own absolute floors — and a real regression that
-  // pushes a sub-0.35s query PAST 0.35s still votes.
-  private val RatioVoteNoiseFloorSec = 0.35
-  // Ambient normalization (round-13): the r11->r12 committed pair showed
-  // the carried-query median drifting 1.07x in lockstep with the CPU
-  // probe median (347->368 ms) on UNCHANGED code — the machine, not the
-  // engine. Dividing prior ratios by the probe-median ratio removes that
-  // phantom drift from the FLAG tier and the global gate so it stops
-  // eating 2x-gate headroom each round. The index is the CPU probe only
-  // (throughput-bound, tracks sustained co-tenancy; the IO probe is an
-  // EPISODE detector — writeback spikes — and normalizing by it would
-  // mask real contention), computed from the ROUNDED artifact medians so
-  // tools/replay_sentinel.py recomputes it byte-identically, and capped:
-  // a genuine whole-run squeeze inflates the run's own probes, and an
-  // uncapped ratio would normalize the squeeze away — at the cap, a
-  // synthetic uniformly-5x run still reads 4x median and flags globally.
-  // Deliberately NOT applied to the requeue tier (pass-1-median
-  // normalization, proven in r12) — and the flag tier deliberately does
-  // NOT use the query median: a uniform CODE regression inflates the
-  // query median but never the probe, so probe-normalized flags cannot
-  // be fooled by the engine itself getting slower.
-  private val AmbientRatioCap = 1.25
+  type Query = (SparkSession, String) => DataFrame
+
+  /** A finished run: each completed query's pass times in selection
+    * order, the queries that threw, and the probe times in ms.
+    */
+  final case class Report(
+      sfDir: String,
+      passes: Seq[(String, Seq[Double])],
+      failed: Seq[String],
+      probesMs: Seq[Double],
+      priorFile: String,
+      priorProbeMs: Option[Double]) {
+    val times: Seq[(String, Double)] = passes.map { case (n, ts) => n -> ts.min }
+    val total: Double = times.map(_._2).sum
+    val probeMedianMs: Double = probesMs.sorted.apply(probesMs.length / 2)
+    val probeRatio: Option[Double] = priorProbeMs.map(probeMedianMs / _)
+
+    private def str(s: String) = "\"" + s + "\""
+    private def obj(kvs: Seq[(String, Any)]) =
+      kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    private def failedJson = failed.map(str).mkString("[", ",", "]")
+    private def ratioJson = probeRatio.fold("null")(r => f"$r%.4f")
+
+    /** The `bench_full.json` artifact: full query names, seconds. */
+    def fullJson: String = obj(Seq(
+      "metric" -> str("total"), "value" -> total, "unit" -> str("sec"),
+      "isolation" -> str("clearCache-between-queries"),
+      "noise_probe_ms" -> probesMs.map(p => math.round(p)).mkString("[", ",", "]"),
+      "probe_median_ms" -> math.round(probeMedianMs),
+      "prior_file" -> str(priorFile), "probe_ratio" -> ratioJson,
+      "failed" -> failedJson,
+      "passes" -> obj(passes.map { case (n, ts) => n -> ts.mkString("[", ",", "]") }),
+      "queries" -> obj(times), "sf" -> str(sfDir)))
+
+    /** The stdout line. It fits a 2,000-char tail with every query
+      * visible: keys are the qNN prefixes, values integer milliseconds.
+      */
+    def line: String = obj(Seq(
+      "metric" -> str("total"), "value" -> total, "unit" -> str("sec"),
+      "unit_queries" -> str("ms"),
+      "isolation" -> str("clearCache-between-queries"),
+      "failed" -> failedJson, "probe_ratio" -> ratioJson,
+      "queries" -> obj(times.map { case (n, t) => n.takeWhile(_ != '_') -> math.round(t * 1000) }),
+      "sf" -> str(sfDir)))
+  }
+
+  /** Two timed passes over `selected` on `sfDir`. A query that throws in
+    * pass 1 is not run again; one that throws in pass 2 is dropped too.
+    */
+  def run(spark: SparkSession, sfDir: String, selected: Seq[(String, Query)],
+      priorFile: String): Report = {
+    // pure CPU-throughput work the size of a small query: ~1.5e9
+    // codegen'd long ops across all cores, ~300 ms on a quiet 32-core
+    // host and ~5x under a full-core squeeze
+    def probeMs(): Double = {
+      val t0 = System.nanoTime()
+      spark.range(1500000000L).selectExpr("sum(id % 7)").collect()
+      val ms = (System.nanoTime() - t0) / 1e6
+      System.err.println(f"[bench] probe $ms%.0f ms")
+      ms
+    }
+    val probes = scala.collection.mutable.ArrayBuffer(probeMs())
+    val passes = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    for (pass <- 1 to 2) {
+      for ((name, fn) <- selected if !failed(name)) {
+        val (t, ok) = JobProf.timeQuery(spark, s"[bench] pass $pass $name", fn, sfDir)
+        if (ok) {
+          passes(name) = passes.getOrElse(name, Vector.empty) :+ t
+          System.err.println(f"[bench] pass $pass $name $t%.2fs")
+        } else {
+          failed += name
+          passes -= name
+        }
+      }
+      probes += probeMs()
+    }
+    val priorProbeMs = try {
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(priorFile)), "UTF-8")
+      "\"probe_median_ms\"\\s*:\\s*([0-9][-0-9.eE+]*)".r
+        .findFirstMatchIn(txt).map(_.group(1).toDouble)
+    } catch { case scala.util.control.NonFatal(_) => None }
+    Report(sfDir, passes.toSeq, failed.toSeq, probes.toSeq, priorFile, priorProbeMs)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkEnv.session()
-    val wall0 = System.nanoTime()
-    def wallS: Long = (System.nanoTime() - wall0) / 1000000000L
-    // Untimed warmup: JIT + codegen + parquet footer caches, so the first
-    // timed query (and first probe) doesn't absorb JVM startup cost.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
-
-    // The calibration probe (see scaladoc): pure CPU-throughput work the
-    // size of a small query — ~1.5e9 codegen'd long ops across all cores,
-    // ~300 ms quiet, ~5x under a measured full-core squeeze (an earlier
-    // latency-bound probe sat flat under the same squeeze). Times in ms.
-    def probeMs(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1500000000L).selectExpr("sum(id % 7)").collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    // The I/O probe (sentinel v2): a small parquet write + read-back.
-    // Values are hash-scrambled so column encodings can't collapse the
-    // bytes; local[32] splits the write into 32 small files, so the
-    // probe pays file create/close/fsync-adjacent costs — the syscalls a
-    // writeback squeeze stalls. ~250-500 ms quiet; a dd-driven dirty-page
-    // squeeze inflates it where the CPU probe sits flat (measured —
-    // tools/stress_bench.sh).
-    val ioProbePath = java.nio.file.Files
-      .createTempDirectory("graft-ioprobe").toString + "/p"
-    def ioProbeMs(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(2000000L)
-        .selectExpr("id", "id * 2654435761 % 1000000007 AS v")
-        .write.mode("overwrite").parquet(ioProbePath)
-      spark.read.parquet(ioProbePath).selectExpr("sum(v)").collect()
-      (System.nanoTime() - t0) / 1e6
-    }
-    // untimed write warmup: the FIRST parquet write of a JVM pays codec +
-    // committer init (measured 2.5-6x a steady io probe) — burn it here
-    // so calibration starts from steady state
-    ioProbeMs()
-    val probeLog = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val ioProbeLog = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def loggedProbe(): Double = {
-      val p = probeMs()
-      probeLog += p
-      val io = ioProbeMs()
-      ioProbeLog += io
-      System.err.println(
-        f"[bench] t+${wallS}%ds probe cpu ${p}%.0f ms io ${io}%.0f ms")
-      p
-    }
-    val calib = Vector.fill(CalibrationProbes)(loggedProbe()).sorted
-    System.err.println(
-      f"[bench] startup probe median ${calib(calib.length / 2)}%.0f ms")
-
-    // Committed-prior ratchet (sentinel v2): per-query times from the
-    // last committed artifact. Missing/unparseable file -> empty map
-    // (new queries simply have no prior).
-    val priorPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json")
-    val prior: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(priorPath)), "UTF-8")
-      "\"queries\"\\s*:\\s*\\{".r.findFirstMatchIn(txt) match {
-        case None => Map.empty[String, Double]
-        case Some(m) =>
-          val body = txt.substring(m.end, txt.indexOf('}', m.end))
-          "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9][-0-9.eE+]*)".r
-            .findAllMatchIn(body)
-            .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    // The PROBES' own committed priors: a contention episode that spans
-    // an entire short run (startup calibration included) inflates the
-    // run's own probe median, so 3x-own-median never trips — the same
-    // startup-poisoning failure the median was built against, scaled up.
-    // The committed artifact's quiet-weather probe medians are the
-    // baseline that can't be poisoned by today's episode.
-    def priorField(field: String): Option[Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(priorPath)), "UTF-8")
-      ("\"" + field + "\"\\s*:\\s*([0-9][-0-9.eE+]*)").r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    val priorCpuMedianMs = priorField("probe_median_ms")
-    val priorIoMedianMs = priorField("io_probe_median_ms")
-    System.err.println(
-      s"[bench] prior artifact $priorPath: ${prior.size} query priors, " +
-        s"probe medians cpu $priorCpuMedianMs io $priorIoMedianMs")
-    def exceedsPrior(name: String, t: Double): Boolean =
-      prior.get(name).exists(p =>
-        t > PriorRatchetFactor * p && t > PriorRatchetFloorSec)
-
-    // Dev aid: SPARK_GRAFT_BENCH_ONLY=q83,q22 times just those queries in a
-    // fresh JVM (cold-cache A/B without paying for the full suite). The
-    // driver never sets it, so round benches always cover everything.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(o => o.exists(name.startsWith)) }
-
-    // Failure accounting: a query that throws is not a measurement. Its
-    // name lands in the artifact's `failed` list and it is left out of
-    // the totals, the requeue pass and every ratio vote, so a failure
-    // can never read as a fast query.
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        failed += name
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    /** Measure one query; returns (best seconds, suspect). Suspect = the
-      * contention-adaptive min-of-N exhausted its sampling budget with the
-      * last two runs still disagreeing >2x — identical code, so the host
-      * was not quiet and even the min may be inflated.
-      */
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
-      // Isolation rule: clear any cached/persisted plans between queries so
-      // no query is timed against another query's cache (a leaked persist
-      // once made q22 look 13x faster than its honest cost).
-      spark.catalog.clearCache()
-      val first = once(name, fn)
-      // Contention-adaptive min-of-N: when two consecutive measurements of
-      // IDENTICAL code disagree >2x, a shared-host noise episode spanned
-      // one of them — keep sampling (≤4 runs) until two agree, take the
-      // min. Bounded, and quiet runs still cost exactly two executions.
-      // A failed run ends the sampling (the caller drops the query).
-      if (first <= RerunThresholdSec || failed(name)) (first, false)
-      else {
-        var prev = first
-        var cur = once(name, fn)
-        var best = math.min(prev, cur)
-        var tries = 2
-        while (tries < 4 && !failed(name) &&
-            math.max(prev, cur) > 2.0 * math.min(prev, cur)) {
-          prev = cur
-          cur = once(name, fn)
-          best = math.min(best, cur)
-          tries += 1
-        }
-        (best, math.max(prev, cur) > 2.0 * math.min(prev, cur))
-      }
-    }
-
-    // Pass 1: probe pair (cpu, io) before each ProbeEveryN-query block and
-    // once after the last; block k's measurement window is bracketed by
-    // blockProbes(k) and blockProbes(k+1).
-    val blockProbes = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    def loggedProbePair(): (Double, Double) = {
-      val c = loggedProbe()
-      (c, ioProbeLog.last)
-    }
-    val pass1 = scala.collection.mutable.ArrayBuffer
-      .empty[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame, Double, Boolean, Int)]
-    selected.zipWithIndex.foreach { case ((name, fn), i) =>
-      if (i % ProbeEveryN == 0) blockProbes += loggedProbePair()
-      val (dt, suspect) = measure(name, fn)
-      if (failed(name)) System.err.println(f"[bench] t+${wallS}%ds $name FAILED")
-      else {
-        System.err.println(f"[bench] t+${wallS}%ds $name $dt%.2fs" +
-          (if (suspect) " SUSPECT(spread>2x)" else "") +
-          (if (exceedsPrior(name, dt)) " PRIOR>3x" else ""))
-        pass1 += ((name, fn, dt, suspect, i / ProbeEveryN))
-      }
-    }
-    blockProbes += loggedProbePair() // closes the last block's window
-
-    // Per-flavor hot thresholds from the median of ALL probes so far (the
-    // 5 startup calibrations plus one per block): a contention episode —
-    // even one that spans JVM startup and would have poisoned a
-    // startup-only calibration — touches a minority of the run's probes,
-    // so the median stays a quiet-host estimate while any probe 3x above
-    // its flavor's median marks its window contended.
-    def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
-    val probeMedianMs = median(probeLog.toSeq)
-    val ioMedianMs = median(ioProbeLog.toSeq)
-    // threshold baseline = min(this run's median, committed quiet-weather
-    // median): today's episode can inflate the former but never the
-    // latter, so even a run FULLY covered by contention flags itself
-    val hotMs = HotProbeFactor *
-      math.min(probeMedianMs, priorCpuMedianMs.getOrElse(Double.MaxValue))
-    val ioHotMs = HotProbeFactor *
-      math.min(ioMedianMs, priorIoMedianMs.getOrElse(Double.MaxValue))
-    def pairHot(p: (Double, Double)): Boolean = p._1 > hotMs || p._2 > ioHotMs
-    System.err.println(
-      f"[bench] probe medians cpu ${probeMedianMs}%.0f / io ${ioMedianMs}%.0f ms, " +
-        f"hot thresholds ${hotMs}%.0f / ${ioHotMs}%.0f ms, " +
-        f"hot pass-1 probes cpu ${probeLog.count(_ > hotMs)}/${probeLog.length} " +
-        f"io ${ioProbeLog.count(_ > ioHotMs)}/${ioProbeLog.length}")
-
-    // Ambient index (see AmbientRatioCap): how much slower is THIS host
-    // than the one that recorded the committed prior, by the CPU probe.
-    // Rounded current median so the offline replay recomputes exactly.
-    val probeRatioCpu = priorCpuMedianMs
-      .map(p => math.round(probeMedianMs).toDouble / p).getOrElse(1.0)
-    val probeRatioIo = priorIoMedianMs
-      .map(p => math.round(ioMedianMs).toDouble / p).getOrElse(1.0)
-    val probeRatio = math.min(AmbientRatioCap, math.max(1.0, probeRatioCpu))
-    System.err.println(
-      f"[bench] ambient probe ratio cpu $probeRatioCpu%.4f io $probeRatioIo%.4f " +
-        f"-> clamped $probeRatio%.4f")
-    // the FLAG tier, ambient-normalized: identical code on THIS host
-    // cannot honestly exceed 3x of (prior scaled by the machine drift)
-    def exceedsPriorAmbient(name: String, t: Double): Boolean =
-      prior.get(name).exists(p =>
-        t / probeRatio > PriorRatchetFactor * p && t > PriorRatchetFloorSec)
-
-    // Pass-1 median prior ratio: the run's honest ambient drift. The
-    // requeue trigger normalizes each query's ratio by it before
-    // thresholding, so a uniformly-slower run doesn't mass-requeue and a
-    // clustered local episode (which rides ON TOP of the median) still
-    // trips. Clamped to >=1.0 — a faster-than-prior run must not inflate
-    // ratios and over-requeue.
-    val pass1Ratios = pass1.flatMap { case (n, _, t, _, _) =>
-      prior.get(n).filter(p => p >= GlobalRatioMinPriorSec &&
-        math.max(p, t) >= RatioVoteNoiseFloorSec).map(t / _)
-    }
-    val pass1MedianRatio =
-      if (pass1Ratios.isEmpty) 1.0 else math.max(1.0, median(pass1Ratios.toSeq))
-    System.err.println(
-      f"[bench] pass-1 median prior ratio $pass1MedianRatio%.3f " +
-        f"(${pass1Ratios.length} voting queries)")
-    // Tiered requeue trigger (see SubSecondPriorSec): sub-second priors
-    // requeue at a normalized 2x (cheap re-measurement, noise-prone
-    // band); larger priors keep the flat 3x ratchet. FLAGGING
-    // (prior_exceeded/contended) stays at the hard 3x — a 2-3x
-    // sub-second residue after requeue can be honest JIT/ambient noise
-    // and must not stamp the artifact.
-    def priorTier(name: String, t: Double): Option[String] =
-      prior.get(name).flatMap { p =>
-        val norm = t / pass1MedianRatio
-        if (p < SubSecondPriorSec) {
-          if (norm > SubSecondRequeueFactor * p && t > SubSecondRequeueFloorSec)
-            Some("prior_subsecond") else None
-        } else if (p >= HeavyPriorSec && norm > HeavyRequeueFactor * p) {
-          Some("prior_heavy")
-        } else {
-          if ((norm > PriorRatchetFactor * p && t > PriorRatchetFloorSec) ||
-            exceedsPriorAmbient(name, t)) Some("prior_large") else None
-        }
-      }
-    // Pass 2: requeue queries whose window overlapped a hot probe (either
-    // flavor), whose own spread stayed unresolved, or whose time exceeds
-    // its tiered prior-ratchet trigger (steady contention the
-    // probes+spread can miss) — each re-measurement bracketed by its own
-    // probe pairs.
-    val requeued = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Boolean)]
-    val requeueReasons = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    val priorExceeded = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = pass1.flatMap { case (name, fn, t1, suspect1, block) =>
-      val windowHot = pairHot(blockProbes(block)) || pairHot(blockProbes(block + 1))
-      val tier = priorTier(name, t1)
-      if (!windowHot && !suspect1 && tier.isEmpty) Some(name -> (t1, false))
-      else {
-        requeueReasons += name -> (
-          (if (windowHot) Seq("window_hot") else Nil) ++
-            (if (suspect1) Seq("spread") else Nil) ++ tier.toSeq)
-        val rb = loggedProbePair()
-        val (t2, suspect2) = measure(name, fn)
-        val ra = loggedProbePair()
-        if (failed(name)) {
-          System.err.println(f"[bench] $name REQUEUED $t1%.2fs -> FAILED")
-          None
-        } else {
-          val pass2Contended = pairHot(rb) || pairHot(ra) || suspect2
-          // if pass 1 (taken in a known-dirty window) still beat pass 2, the
-          // accepted number carries pass 1's contamination risk
-          val acceptedContended = if (t2 <= t1) pass2Contended else true
-          val accepted = math.min(t1, t2)
-          // the ratchet holds across passes: identical code cannot honestly
-          // slow 3x vs its (ambient-scaled) committed prior, so a surviving
-          // excess is contention by definition even when every probe stayed
-          // quiet
-          val stillPrior = exceedsPriorAmbient(name, accepted)
-          if (stillPrior) priorExceeded += name
-          val flagged = acceptedContended || stillPrior
-          System.err.println(f"[bench] $name REQUEUED $t1%.2fs -> $t2%.2fs" +
-            (if (flagged) " (still contended)" else "") +
-            (if (stillPrior) " PRIOR>3x" else ""))
-          requeued += name -> (t1, t2, flagged)
-          Some(name -> (accepted, flagged))
-        }
-      }
-    }.toSeq
-
-    val total = results.map(_._2._1).sum
-    val contendedNames = results.collect { case (n, (_, true)) => n }
-    // Global sanity: identical code does not get uniformly slower. If the
-    // median accepted/prior ratio says the WHOLE run drifted >2x, the
-    // artifact self-reports as globally contended instead of accepting.
-    val ratios = results.flatMap { case (n, (v, _)) =>
-      prior.get(n).filter(p => p >= GlobalRatioMinPriorSec &&
-        math.max(p, v) >= RatioVoteNoiseFloorSec).map(v / _)
-    }
-    val medianPriorRatio = if (ratios.isEmpty) 1.0 else median(ratios)
-    // the gate votes on the AMBIENT-NORMALIZED median: machine drift
-    // (bounded by the cap) is not contention, while a real squeeze
-    // blows through the cap — a uniform 5x run still reads 4x here
-    val medianPriorRatioNorm = medianPriorRatio / probeRatio
-    val globallyContended = medianPriorRatioNorm > GlobalRatioLimit
-    if (globallyContended)
-      System.err.println(f"[bench] GLOBALLY CONTENDED: normalized median " +
-        f"prior ratio $medianPriorRatioNorm%.2f over ${ratios.length} queries")
-    // Full-precision artifact with full query names (driver/judge can read
-    // the file even when stdout is tail-truncated).
-    val fullQs = results.map { case (k, (v, _)) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val probesJson = probeLog.map(p => math.round(p)).mkString("[", ",", "]")
-    val ioProbesJson = ioProbeLog.map(p => math.round(p)).mkString("[", ",", "]")
-    val requeueJson = requeued.map { case (k, (t1, t2, c)) =>
-      "\"" + k + "\":{\"pass1\":" + t1 + ",\"pass2\":" + t2 + ",\"contended\":" + c + "}"
-    }.mkString("{", ",", "}")
-    val contendedJson = contendedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val priorExceededJson = priorExceeded.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Sentinel self-audit (round-13): everything the offline replay tool
-    // recomputes, embedded so a reader adjudicates from the artifact
-    // alone — tools/replay_sentinel.py --verify re-derives this block
-    // from (prior artifact, this artifact) and diffs it field by field.
-    val histBounds = Seq(0.5, 0.8, 1.25, 2.0, 3.0)
-    val histKeys = Seq("lt_0.5", "0.5_0.8", "0.8_1.25", "1.25_2", "2_3", "ge_3")
-    val histCounts = Array.ofDim[Int](histKeys.length)
-    results.foreach { case (n, (v, _)) =>
-      prior.get(n).filter(p => p >= GlobalRatioMinPriorSec &&
-        math.max(p, v) >= RatioVoteNoiseFloorSec).foreach { p =>
-        val r = v / p / probeRatio
-        histCounts(histBounds.indexWhere(r < _) match {
-          case -1 => histKeys.length - 1; case i => i
-        }) += 1
-      }
-    }
-    val tierKeys = Seq("window_hot", "spread", "prior_subsecond",
-      "prior_heavy", "prior_large")
-    val tierCounts = tierKeys.map(k =>
-      "\"" + k + "\":" + requeueReasons.values.count(_.contains(k)))
-      .mkString("{", ",", "}")
-    val reasonsJson = requeueReasons.map { case (k, rs) =>
-      "\"" + k + "\":" + rs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val histJson = histKeys.zip(histCounts).map { case (k, c) =>
-      "\"" + k + "\":" + c
-    }.mkString("{", ",", "}")
-    val auditJson =
-      s"""{"probe_ratio_cpu":${f"$probeRatioCpu%.4f"},"probe_ratio_io":${f"$probeRatioIo%.4f"},"probe_ratio":${f"$probeRatio%.4f"},"pass1_median_ratio":${f"$pass1MedianRatio%.4f"},"median_prior_ratio_normalized":${f"$medianPriorRatioNorm%.4f"},"tier_counts":$tierCounts,"requeue_reasons":$reasonsJson,"ratio_histogram":$histJson}"""
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","isolation":"clearCache-between-queries","noise_probe_ms":$probesJson,"io_probe_ms":$ioProbesJson,"probe_median_ms":${math.round(probeMedianMs)},"io_probe_median_ms":${math.round(ioMedianMs)},"hot_probe_ms":${math.round(hotMs)},"io_hot_probe_ms":${math.round(ioHotMs)},"prior_file":"$priorPath","prior_queries":${prior.size},"median_prior_ratio":${f"$medianPriorRatio%.3f"},"pass1_median_ratio":${f"$pass1MedianRatio%.3f"},"probe_ratio":${f"$probeRatio%.4f"},"median_prior_ratio_normalized":${f"$medianPriorRatioNorm%.3f"},"globally_contended":$globallyContended,"prior_exceeded":$priorExceededJson,"requeued":$requeueJson,"contended":$contendedJson,"failed":$failedJson,"sentinel_audit":$auditJson,"queries":$fullQs,"sf":"$sfDir"}"""
-    // a filtered dev run must not clobber the full-suite artifact — it
-    // writes bench_subset.json instead (stress_bench.sh bootstraps its
-    // quiet probe baseline from one)
-    val artifactName =
-      if (only.isEmpty) "bench_full.json" else "bench_subset.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(artifactName),
-      (fullJson + "\n").getBytes("UTF-8"))
-    // Stdout line must fit a 2,000-char tail with all queries visible:
-    // keys shortened to their qNN prefix, values integer milliseconds;
-    // the probe series lives in the artifact, only its summary fits here.
-    val qs = results.map { case (k, (v, _)) =>
-      "\"" + k.takeWhile(_ != '_') + "\":" + math.round(v * 1000)
-    }.mkString("{", ",", "}")
-    val hotProbes = probeLog.count(_ > hotMs) + ioProbeLog.count(_ > ioHotMs)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","unit_queries":"ms","isolation":"clearCache-between-queries","probes":${probeLog.length + ioProbeLog.length},"hot_probes":$hotProbes,"requeued":${requeued.size},"contended":${contendedNames.length},"prior_exceeded":${priorExceeded.length},"failed":$failedJson,"probe_ratio":${f"$probeRatio%.3f"},"globally_contended":$globallyContended,"queries":$qs,"sf":"$sfDir"}""")
+    JobProf.warmUp(spark, sfDir)
+    val report = run(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "bench_prior.json"))
+    java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
+      (report.fullJson + "\n").getBytes("UTF-8"))
+    println(report.line)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** The profiler: runs selected inventory queries under the bench's
@@ -26,6 +27,32 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * rather than on the 1× side. Queries keep their own parameters at N×.
   */
 object JobProf {
+
+  /** Untimed warm-up before the first timed query: JIT, codegen and the
+    * parquet footer caches, so that query does not absorb JVM start-up.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    Seq("lineitem", "nation").foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+  }
+
+  /** One timed run of query `fn` on `dir`, as (wall seconds, completed).
+    * Cached plans are cleared first, so no query is timed against another
+    * query's cache (a leaked persist once made q22 look 13x faster than its
+    * honest cost), and the result is forced with a noop write, which runs
+    * the full plan, projections a count() would prune included. A query
+    * that throws is logged to stderr as `<label> FAILED: <message>`.
+    */
+  def timeQuery(spark: SparkSession, label: String,
+      fn: (SparkSession, String) => DataFrame, dir: String): (Double, Boolean) = {
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    val ok =
+      try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable => System.err.println(s"$label FAILED: ${e.getMessage}"); false }
+    ((System.nanoTime() - t0) / 1e9, ok)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def parse(a: List[String], repeat: Int, scale: Int): (Int, Int, List[String]) = a match {
@@ -64,9 +91,7 @@ object JobProf {
         }
       }
     })
-    // warmup (mirrors Bench)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    warmUp(spark, sfDir)
     val sel = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => names.isEmpty || names.exists(n.startsWith) }
     val dirs = Seq(1 -> sfDir) ++
@@ -75,14 +100,9 @@ object JobProf {
     val last = scala.collection.mutable.Map.empty[(String, Int), Option[Double]]
     println(f"${"query"}%-28s ${"run"}%3s ${"x"}%3s ${"wall_s"}%7s ${"task_s"}%7s ${"gc_s"}%5s ${"ser_s"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"compiles"}%8s")
     try for (run <- 1 to repeat; (name, fn) <- sel; (x, dir) <- dirs) {
-      spark.catalog.clearCache()
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0); serMs.set(0)
       val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"$name x$x FAILED: ${e.getMessage}"); false }
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (wall, ok) = timeQuery(spark, s"$name x$x", fn, dir)
       last((name, x)) = if (ok) Some(wall) else None
       // listener events drain asynchronously; give them a beat
       Thread.sleep(300)

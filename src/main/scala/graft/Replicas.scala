@@ -122,11 +122,5 @@ object Replicas {
   }
 
   /** Delete a directory made by [[write]]. */
-  def delete(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(dir))
-  }
+  def delete(dir: String): Unit = SparkEnv.deleteDir(dir)
 }

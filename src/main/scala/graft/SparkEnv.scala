@@ -26,12 +26,31 @@ object SparkEnv {
   }
 
   /** Scratch directory for transient test/bench fixtures, on the same
-    * fast storage as [[localDir]].
+    * fast storage as [[localDir]]. That storage may be RAM, so the
+    * directory and its contents are deleted when the JVM exits.
     */
-  def scratchDir(prefix: String): String =
-    java.nio.file.Files
+  def scratchDir(prefix: String): String = {
+    val d = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(localDir), prefix)
       .toString
+    scratchDirs.add(d)
+    d
+  }
+
+  private lazy val scratchDirs = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    sys.addShutdownHook(dirs.forEach(d => deleteDir(d)))
+    dirs
+  }
+
+  /** Delete `dir` and everything under it; a missing path is a no-op. */
+  private[graft] def deleteDir(dir: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete()
+    }
+    rm(new java.io.File(dir))
+  }
 
   /** AQE coalesce floor (round 15, guide §2.2/§2.5): AQE's default 1 MB
     * minPartitionSize coalesces every sub-32 MB shuffle below `cpus`

@@ -650,42 +650,25 @@ object Dedup {
         coalesce(col("cleaned_text"), lit("")).as("cleaned_text"))
   }
 
-  /** MinHash signature columns `mh_0..mh_{numHashes-1}` per id: the i-th
-    * hash is the minimum over the document's shingles of the FIXED-LENGTH
-    * 15-hex-digit window of md5(shingle) starting at offset i. One md5 per
-    * shingle; family member i is decided by hex digits from offset i (the
-    * same independence argument as the classic rotation family), so
-    * per-row hash cost is constant in numHashes. The short fixed window
-    * matters at scale: equal-length hex strings compare lexicographically
-    * = numerically, the hash-aggregate buffer holds 15-byte values
-    * instead of 32-char rotations, and partial-agg merge traffic halves.
-    * Recorded cold-JVM A/B (rounds 5-6; one fresh JVM per variant,
-    * min-of-3 on sf0.1 full q22 pipeline, identical 256 candidate pairs):
-    * window 2.13 s vs rotation 3.10 s — 1.46× faster; the plan it chose
-    * is locked by PlanSpec's minhash LSH test. (Round-5 bench once
-    * showed q22 at 7.4 s vs round-4's 0.57 s: the 0.57 was subsidized by a
-    * since-fixed cross-query persist leak and the 7.4 by shared-host
-    * noise; the bench now clears caches between queries and this A/B is
-    * the controlled measurement.) Portable: any engine with md5 + substr
-    * reproduces it bit-for-bit. Duplicate shingles are harmless (min is
-    * idempotent). One shuffle (groupBy id).
-    */
-  def minhashSignatures(shingles: DataFrame, numHashes: Int): DataFrame = {
-    require(numHashes <= 18, "15-hex windows over md5 support at most 18 hashes")
-    val withH = shingles.withColumn("__h", md5(col("shingle")))
-    val aggs = (0 until numHashes).map { i =>
-      min(substring(col("__h"), i + 1, 15)).as(s"mh_$i")
-    }
-    withH.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** MAP-SIDE MinHash signature: all of a document's shingles live in its
     * own row, so the full signature is an array fold — md5 each gram once
     * into an array, then `array_min` one 15-hex window per slot. ZERO
-    * shuffles and no exploded shingle table, versus
-    * [[minhashSignatures]]'s explode + groupBy. Bit-identical hash family
-    * (min over the same md5 windows), so the two are interchangeable
-    * under any oracle. Appends `mh_0..mh_{n-1}` to `df`'s columns.
+    * shuffles and no exploded shingle table. Appends `mh_0..mh_{n-1}` to
+    * `df`'s columns.
+    *
+    * Hash family: the i-th hash is the minimum over the document's
+    * shingles of the FIXED-LENGTH 15-hex-digit window of md5(shingle)
+    * starting at offset i. One md5 per shingle; family member i is decided
+    * by hex digits from offset i (the same independence argument as the
+    * classic rotation family), so per-row hash cost is constant in
+    * numHashes. The short fixed window matters at scale: equal-length hex
+    * strings compare lexicographically = numerically and hold 15 bytes
+    * instead of 32-char rotations. Recorded cold-JVM A/B (rounds 5-6; one
+    * fresh JVM per variant, min-of-3 on sf0.1 full q22 pipeline, identical
+    * 256 candidate pairs): window 2.13 s vs rotation 3.10 s — 1.46×
+    * faster; the plan it chose is locked by PlanSpec's minhash LSH test.
+    * Portable: any engine with md5 + substr reproduces it bit-for-bit.
+    * Duplicate shingles are harmless (min is idempotent).
     *
     * This is also what makes MinHash STREAMABLE: a stateless per-row
     * signature needs no pre-shuffle aggregation, so band buckets can feed

@@ -126,7 +126,7 @@ object Sketch {
     * for grp_a < grp_b.
     *
     * Same md5/15-hex-window hash family as [[graft.ops.Dedup
-    * .minhashSignatures]], so any engine with md5 reproduces the sketch —
+    * .withMinhashSignature]], so any engine with md5 reproduces the sketch —
     * and the estimate — bit-for-bit.
     *
     * 100 TB shape: ONE aggregation shuffle keyed by group (map-side

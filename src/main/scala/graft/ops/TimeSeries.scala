@@ -959,7 +959,9 @@ object TimeSeries {
     * Overflow: (Σx_p)² ≤ n²·10¹²·v² rides decimal(38,0) to
     * n·|v| ≈ 10¹³ per key; additionally Σx per key must fit int64
     * (the hi/rem split that keeps ⌊(Σx)²/n⌋ exact divides a LONG —
-    * n·10⁶·|v| < 9·10¹⁸).
+    * n·10⁶·|v| < 9·10¹⁸). The strength divide runs by long division and
+    * never forms (ss_t − ss_w)·10⁶; it needs ss_t < 10³⁷, which the
+    * int64 bound implies for |v| < 10¹² (ss_t ≤ Σx² ≤ max|x|·Σ|x|).
     *
     * 100 TB shape: one (key, phase) map-side-combined groupBy, a
     * key-keyed rollup — two collapsing shuffles, nothing else.
@@ -972,7 +974,7 @@ object TimeSeries {
       period: Int): DataFrame = {
     require(period >= 2, s"period $period must be >= 2")
     val dec = "decimal(38,0)"
-    df.filter(col(keyCol).isNotNull && col(bucketCol).isNotNull &&
+    val rolled = df.filter(col(keyCol).isNotNull && col(bucketCol).isNotNull &&
         col(valueCol).isNotNull)
       .select(col(keyCol).cast("string").as("__k"),
         pmod(col(bucketCol).cast("long"), lit(period.toLong)).as("__p"),
@@ -1004,11 +1006,24 @@ object TimeSeries {
         s"""cast(__hi2 as $dec) * __hi2 * n_buckets
            + 2 * cast(__hi2 as $dec) * __rem2
            + (__rem2 * __rem2 div n_buckets)"""))
-      .withColumn("__t", expr("__q - __sq"))
+      .withColumn("__t", expr("case when __q - __sq > 0 then __q - __sq end"))
       .withColumn("__num", expr("__w - __sq"))
-      .select(col("__k").as("key"), col("n_buckets"), col("n_phases"),
-        expr("cast(case when __t > 0 then __num * 1000000 div __t end as long)")
-          .as("strength_micro"))
+    // __num·10⁶ div __t without forming __num·10⁶ (it overflows
+    // decimal(38,0) once __num passes 10³²): the integral quotient, then
+    // six decimal long-division steps on the remainder. `div` truncates
+    // toward zero and is odd in its numerator, so each digit and the
+    // result truncate exactly as the one-step divide does; a remainder
+    // stays below __t in magnitude, and below 10⁵·|__num|, so 10× it fits
+    // whenever __t < 10³⁷ or __num·10⁶ does
+    val micro = (1 to 6).foldLeft(
+      rolled.withColumn("__sm", expr("__num div __t"))
+        .withColumn("__r", expr(s"__num - cast(__sm as $dec) * __t"))) { (d, _) =>
+      d.withColumn("__d", expr("__r * 10 div __t"))
+        .withColumn("__sm", expr("__sm * 10 + __d"))
+        .withColumn("__r", expr(s"__r * 10 - cast(__d as $dec) * __t"))
+    }
+    micro.select(col("__k").as("key"), col("n_buckets"), col("n_phases"),
+      col("__sm").as("strength_micro"))
   }
 
   /** Seasonal (Hirsch–Slack) Mann–Kendall per key — the trend test

@@ -244,7 +244,7 @@ class PlanSpec extends SparkSuite {
   test("minhash LSH (q22/q71): no rescans past the checkpoint, bounded shuffles") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     // Locks the honest q22 plan the round-5/6 A/B adjudicated (recorded
-    // at Dedup.minhashSignatures): everything downstream of the band-bucket
+    // at Dedup.withMinhashSignature): everything downstream of the band-bucket
     // localCheckpoint is bucket-local — hot-bucket count, broadcast
     // anti-join cap, self-join sides, final distinct. A parquet scan here
     // means the shingle+signature pipeline came back; shuffle growth means

@@ -1881,11 +1881,16 @@ class StatsOpsSpec extends SparkSuite {
     assert(blind.getAs[Long]("strength_micro") == 0L, blind.toString)
     // constant series: no variance to explain
     assert(ss(Seq.fill(8)(3.0), 4).isNullAt(3))
-    // scalar replay (exact hi/rem floor arithmetic) on random series
-    for (seed <- 1 to 3) {
+    // scalar replay (exact hi/rem floor arithmetic) on random series, and
+    // on a ±3e9 cycle whose ss_t − ss_w ≈ 3.6e32 makes the old one-step
+    // (ss_t − ss_w)·10⁶ overflow decimal(38,0)
+    val random = (1 to 3).map { seed =>
       val rnd = new scala.util.Random(seed + 20)
       val period = rnd.nextInt(4) + 2
-      val vals = Seq.fill(rnd.nextInt(30) + period * 2)(rnd.nextInt(200) / 10.0)
+      (seed, period, Seq.fill(rnd.nextInt(30) + period * 2)(rnd.nextInt(200) / 10.0))
+    }
+    val huge = (4, 2, (0 until 40).map(i => (if (i % 2 == 0) 3e9 else -3e9) + i * 7919 % 1000))
+    for ((seed, period, vals) <- random :+ huge) {
       def mic(x: Double) = math.floor(x * 1e6).toLong
       val byPhase = vals.zipWithIndex.groupBy(_._2 % period)
       val q = vals.map(v => BigInt(mic(v)) * mic(v)).sum

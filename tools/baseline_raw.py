@@ -7,7 +7,7 @@ reference publishes no numbers, so the operative comparison is (a) raw
 hand-authored Spark DataFrame code, and (b) the reference's OWN Spark
 temporal-join recipe (processors/spark/dataframe_builder/join_utils.py:72-110,
 re-implemented verbatim here), timed on the same data, same session
-config, same noop-write protocol as graft.Bench.
+config, same noop-write protocol as graft.JobProf.timeQuery.
 
 Usage: python3 tools/baseline_raw.py [sfDir]
 Compare with: SPARK_GRAFT_SF_DIR=<sfDir> tools/run.sh graft.JobProf --repeat 3 q01_derived_expr   etc.
@@ -30,7 +30,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 spark.range(1000000).selectExpr("sum(id)").collect()  # JIT warmup
 li = spark.read.parquet(f"{sf}/lineitem.parquet")
-li.count()  # footer cache warmup, mirrors graft.Bench
+li.count()  # footer cache warmup
 
 
 def bench(name, df):
@@ -39,7 +39,7 @@ def bench(name, df):
     dt = time.time() - t0
     t0 = time.time()
     df.write.format("noop").mode("overwrite").save()
-    dt = min(dt, time.time() - t0)  # min-of-2, mirrors graft.Bench
+    dt = min(dt, time.time() - t0)  # min-of-2, as graft.Bench reports
     print(f"[raw] {name:28s} {dt:5.2f}s")
     return dt
 

@@ -7,9 +7,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir> [--triscale PATH]
 
 --triscale PATH merges this run's per-query verdicts into a
 machine-readable matrix artifact (PATH keyed by the sfDir basename ->
-{query: ok|bad|rows_only}), so the tri-scale coverage claim is
-adjudicable from an artifact the way the bench's sentinel_audit is —
-a judge replays one sf and diffs its slice.
+{query: ok|bad|rows_only}), so the tri-scale coverage claim can be
+checked from an artifact: a reader replays one sf and diffs its slice.
 """
 import sys, os, json, math
 import duckdb

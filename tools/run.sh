@@ -3,6 +3,7 @@
 # skipping sbt's JVM startup and build lock. Usage:
 #   tools/run.sh graft.Verify /root/testdata/sf0.01 /tmp/vout
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 tools/run.sh graft.Bench
+# (Bench writes bench_full.json into the working directory.)
 set -e
 # the classes of the checkout this script sits in
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
