@@ -17,7 +17,8 @@ class BenchSpec extends SparkSuite {
     val selected: Seq[(String, Bench.Query)] = Seq(
       "q01_good" -> ((s, _) => s.range(1000).selectExpr("id * 2 AS x")),
       "q02_boom" -> ((s, _) => s.range(1).selectExpr("raise_error('boom') AS x")))
-    val r = Bench.run(spark, "/root/testdata/sf0.001", selected, prior)
+    // the queries read no tables, so the sf directory is only echoed
+    val r = Bench.run(spark, "sf", selected, prior)
 
     assert(r.failed == Seq("q02_boom"))
     assert(r.passes.map(_._1) == Seq("q01_good"))
@@ -34,6 +35,7 @@ class BenchSpec extends SparkSuite {
     assert(line \ "failed" == JArray(List(JString("q02_boom"))))
     assert(line \ "queries" == JObject("q01" -> JInt(math.round(good.min * 1000))))
     assert(line \ "value" == JDouble(good.min))
+    assert(line \ "sf" == JString("sf"))
     val JDouble(ratio) = line \ "probe_ratio"
     assert(math.abs(ratio - r.probeMedianMs / 250) < 1e-3, ratio)
 
